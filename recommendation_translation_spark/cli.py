@@ -169,7 +169,7 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
     fold is the single-shuffle union+pivot, and everything stays in the
     DataFrame API.
     """
-    from .operators.features import pivot_features, unpivot_features  # noqa: F401
+    from .operators.features import pivot_features
     from .operators.rank import normalized_rank
     from .pipeline.score import assemble_predictions, score_items
     from .pipeline.train import build_models
@@ -223,6 +223,7 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
 
     targets = p.target_wikis or sites  # JobRunner.scala:47-50
     models = None
+    failures: dict[str, str] = {}  # site -> error
     if p.build_models:
         features = features.cache()
         model_dir = os.path.join(out, "models")
@@ -231,6 +232,7 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
         for site, r in sorted(models.items()):
             if r.error:
                 log.warning("site %s failed: %s", site, r.error)
+                failures[site] = r.error
             else:
                 log.info("site %s rmse=%.6f", site, r.rmse)
     elif p.model_dir:
@@ -243,6 +245,16 @@ def run(spark: SparkSession, p: Params) -> dict[str, str]:
                 models[site] = RandomForestRegressionModel.load(path)  # S9
             except Exception as exc:
                 log.warning("no model for site %s: %s", site, exc)
+                failures[site] = str(exc)
+    # a failed site is logged and skipped (ModelBuilder.scala:35-37), but
+    # a run with no usable model at all would write an empty predictions
+    # file and exit 0
+    if models is not None and set(targets) <= set(failures):
+        first = next(iter(failures.values()), "no target sites")
+        raise RuntimeError(
+            f"no target site has a usable model (sites: {', '.join(targets)}); "
+            f"first error: {first}"
+        )
 
     if p.score_items:  # EP3 scorer
         features = features.cache()

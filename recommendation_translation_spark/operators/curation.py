@@ -553,12 +553,15 @@ def interleave_sources(df: DataFrame, source_col: str, weights: dict[str, int],
         ).alias("cmap")
     )
     # position step of the map entry's source, as a literal CASE
-    # (config data; weights divide SCALE so each step is exact)
-    sexpr = "CASE e.key " + "".join(
-        f"WHEN '{k.replace(chr(39), chr(39) * 2)}' THEN "
-        f"CAST({scale // v} AS BIGINT) "
-        for k, v in sorted(weights.items())
-    ) + f"ELSE CAST({scale} AS BIGINT) END"
+    # (config data; weights divide SCALE so each step is exact); with
+    # no weights every source steps by SCALE (a CASE needs a WHEN)
+    sexpr = f"CAST({scale} AS BIGINT)"
+    if weights:
+        sexpr = "CASE e.key " + "".join(
+            f"WHEN '{k.replace(chr(39), chr(39) * 2)}' THEN "
+            f"CAST({scale // v} AS BIGINT) "
+            for k, v in sorted(weights.items())
+        ) + f"ELSE {sexpr} END"
     # how many of source e's strictly-increasing positions (exact
     # multiples of its step) fall below my vpos: ceil(vpos / step),
     # uncapped; the tie row (position == vpos, i.e. step | vpos) sorts

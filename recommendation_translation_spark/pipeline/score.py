@@ -2,11 +2,9 @@
 
 The reference scores each target site into its own 2-column DataFrame and
 folds them with N−1 chained full-outer joins on id
-(ScorePredictor.scala:47) — N−1 shuffles.  We keep that operator
-available (``assemble_predictions(..., strategy="join_fold")``) for
-parity, but the default path unions the per-site results into ONE long
-DataFrame and pivots: a single shuffle regardless of N (SURVEY §2.3 J2
-mapping).
+(ScorePredictor.scala:47) — N−1 shuffles.  We union the per-site
+results into ONE long DataFrame and pivot instead: a single shuffle
+regardless of N (SURVEY §2.3 J2 mapping).
 """
 
 from __future__ import annotations
@@ -81,19 +79,14 @@ def score_items(
         return dict(pool.map(run, models.items()))
 
 
-def assemble_predictions(per_site: dict[str, DataFrame],
-                         strategy: str = "union_pivot") -> DataFrame:
+def assemble_predictions(per_site: dict[str, DataFrame]) -> DataFrame:
     """Fold per-site score frames into (id, <site1>, <site2>, ...).
 
-    ``join_fold`` reproduces ScorePredictor.scala:47 exactly (N−1 outer
-    joins).  ``union_pivot`` computes the same relation with one shuffle:
-    melt to (id, site, score), then groupBy(id).pivot(site).
+    Computes the relation of ScorePredictor.scala:47's N−1 outer joins
+    with one shuffle: melt to (id, site, score), then
+    groupBy(id).pivot(site).
     """
     sites = sorted(per_site)
-    if strategy == "join_fold":
-        frames = [per_site[s] for s in sites]
-        return reduce(lambda l, r: l.join(r, ["id"], "outer"), frames)
-
     long_frames = [
         df.select(
             F.col("id"),

@@ -19,7 +19,7 @@ from __future__ import annotations
 import logging
 import os
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.regression import RandomForestRegressor, RandomForestRegressionModel
@@ -56,7 +56,6 @@ class TrainResult:
     rmse: float | None = None
     error: str | None = None
     model_path: str | None = None
-    extra: dict = field(default_factory=dict)
 
 
 # Rows per partition for the training set.  The per-site work data is a

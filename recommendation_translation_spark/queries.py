@@ -4490,10 +4490,6 @@ def q_tpch_q2_min_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _pivot_cols_sql() -> str:
-    return _PIVOT_SQL
-
-
 def _lang_id_sql() -> str:
     langs = sorted(LANG_MARKERS)
     score_exprs = {
@@ -9320,78 +9316,190 @@ ORACLES["corpus_epoch_upsample"] = f"""
 """
 
 
-# Dict ORDER is deliberate: the correctness driver records the first
-# ~50 entries into CORRECTNESS_r{N}.json, so verification rotates
-# round-by-round (round-2 verdict #3).  Round-6 front (see the
-# per-section comments below): the seven ML graduations (first hash
-# rows ever — a green window makes the whole catalog hash-checked
-# with zero no_oracle entries), the two round-6 additions, the two
-# ADVICE-touched queries, then the 44 stale r2-era rows
-# refactored-first (round-5 verdict #2) — five trivial ones spill to
-# round 7 because the window holds 50.  The full set is always
-# verified locally by tests/test_oracle_parity.py regardless of
-# position.
+# Dict ORDER is deliberate: the correctness driver checks the first 50
+# entries of ``queries()`` (the driver window).  Rotate the window by
+# moving entries within this literal, never by adding a reorder block;
+# tests/test_catalog_contract.py pins the order.  Every entry is checked
+# locally by tests/test_oracle_parity.py regardless of position.
 QUERIES = {
-    # -- (a) round-6 ML graduations: first hash-checked driver rows for
-    # the seven former rows-only queries (round-5 verdict #1) --
-    "ml_train_rmse": q_ml_train_rmse,
-    "ml_score_topk": q_ml_score_topk,
-    "ml_feature_importance": q_ml_feature_importance,
-    "ml_cv_tuning": q_ml_cv_tuning,
-    "emb_kmeans_centroids": q_emb_kmeans_centroids,
-    "emb_pq_train_report": q_emb_pq_train_report,
-    "emb_pq_topk": q_emb_pq_topk,
-    "emb_pq_persisted_topk": q_emb_pq_persisted_topk,
-    "doc_quality_classifier": q_doc_quality_classifier,
-    "ml_als_recs": _qa.q_ml_als_recs,
-    # -- (b) round-6 additions: first driver rows --
-    "doc_dup_span_maximal": q_doc_dup_span_maximal,
-    "pipeline_e2e_score": q_pipeline_e2e_score,
-    "corpus_bloom_decontaminate": q_corpus_bloom_decontaminate,
-    # -- (c) implementation changed in round 6 (round-5 ADVICE fixes +
-    # the self-review _positional_dup_grams refactor): re-verify under
-    # the driver ahead of already-green entries --
-    "doc_heavy_hitters": q_doc_heavy_hitters,
-    "events_orders_cogroup": q_events_orders_cogroup,
-    "doc_dup_span_removal": q_doc_dup_span_removal,
-    # -- (d) stalest rows (r2) whose implementations were refactored in
-    # r4-r5 (similarity/dedup rewrites) — hard signal predates the
-    # code (round-5 verdict #2) --
-    "dedup_simhash": q_dedup_simhash,
-    "emb_ivf_topk": q_emb_ivf_topk,
-    "emb_ivf_persisted_topk": q_emb_ivf_persisted_topk,
-    "emb_ivfpq_topk": q_emb_ivfpq_topk,
+    "pricing_grouping_sets": q_pricing_grouping_sets,
+    "pysource_scan": q_pysource_scan,
+    "tpch_q8_share": q_tpch_q8_share,
+    "tpch_q9_profit": q_tpch_q9_profit,
+    "tpch_q11_important": q_tpch_q11_important,
+    "tpch_q12_priority": q_tpch_q12_priority,
+    "tpch_q14_promo": q_tpch_q14_promo,
+    "tpch_q15_top_supplier": q_tpch_q15_top_supplier,
+    "tpch_q16_supplier_cnt": q_tpch_q16_supplier_cnt,
+    "dedup_ngram_containment": q_dedup_ngram_containment,
+    "corpus_epoch_upsample": q_corpus_epoch_upsample,
+    "corpus_ccnet_buckets": q_corpus_ccnet_buckets,
+    "corpus_bpe_budget": q_corpus_bpe_budget,
+    "corpus_bpe_pack": q_corpus_bpe_pack,
+    "corpus_dedup_report": q_corpus_dedup_report,
+    "corpus_dsir_resample": q_corpus_dsir_resample,
+    "corpus_dsir_select": q_corpus_dsir_select,
+    "corpus_keep_best": q_corpus_keep_best,
+    "corpus_keep_best_pairs": q_corpus_keep_best_pairs,
+    "dedup_lsh_recall_report": _qa.q_dedup_lsh_recall_report,
+    "dedup_ngram_capped": q_dedup_ngram_capped,
+    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
+    "doc_bigram_perplexity": _qa.q_doc_bigram_perplexity,
+    "corpus_pack_sequences": q_corpus_pack_sequences,
+    "corpus_profile": q_corpus_profile,
+    "corpus_source_quota": q_corpus_source_quota,
+    "corpus_temperature_sample": q_corpus_temperature_sample,
+    "corpus_weighted_sample": _qa.q_corpus_weighted_sample,
+    "dedup_clusters": q_dedup_clusters,
+    "dedup_incremental": q_dedup_incremental,
+    "dedup_semdedup": q_dedup_semdedup,
+    "dedup_simhash64_pairs": q_dedup_simhash64_pairs,
+    "dedup_simhash_pairs": q_dedup_simhash_pairs,
+    "doc_bm25_topk": q_doc_bm25_topk,
+    "doc_dup_span_fraction": q_doc_dup_span_fraction,
+    "doc_string_funcs": q_doc_string_funcs,
+    "docs_compaction": q_docs_compaction,
+    "docs_schema_evolution": q_docs_schema_evolution,
+    "docs_stream_dedup_verified": q_docs_stream_dedup_verified,
+    "emb_ivf_recall_report": q_emb_ivf_recall_report,
     "emb_ivfpq_append_topk": q_emb_ivfpq_append_topk,
-    "emb_pq_refine_topk": q_emb_pq_refine_topk,
+    "emb_ivfpq_recall_report": q_emb_ivfpq_recall_report,
     "emb_pq_refine_recall_report": q_emb_pq_refine_recall_report,
-    "emb_pq_refine_r_sweep": q_emb_pq_refine_r_sweep,
-    "emb_ivfpq_persisted_topk": q_emb_ivfpq_persisted_topk,
-    "emb_cosine_topk": q_emb_cosine_topk,
-    "emb_cosine_topk_np": q_emb_cosine_topk_np,
+    "emb_pq_refine_topk": q_emb_pq_refine_topk,
+    "events_anomaly_mad": _qa.q_events_anomaly_mad,
+    "events_approx_stats": q_events_approx_stats,
+    "events_ewma": _qa.q_events_ewma,
+    "events_first_last_touch": _qa.q_events_first_last_touch,
+    "events_hll_merge": q_events_hll_merge,
+    "events_incremental_agg": q_events_incremental_agg,
+    # -- end of the driver window --
+    "tpch_q2_min_cost": q_tpch_q2_min_cost,
+    "tpch_q4_priority": q_tpch_q4_priority,
+    "tpch_q5_regional": q_tpch_q5_regional,
+    "tpch_q6_forecast": q_tpch_q6_forecast,
+    "tpch_q7_volume": q_tpch_q7_volume,
+    "tpch_q10_returns": q_tpch_q10_returns,
+    "tpch_q13_custdist": q_tpch_q13_custdist,
+    "corpus_interleave": q_corpus_interleave,
+    "corpus_stratified_sample": q_corpus_stratified_sample,
+    "corpus_vocab_growth": _qa.q_corpus_vocab_growth,
+    "customer_rfm": _qa.q_customer_rfm,
+    "dedup_band_histogram": q_dedup_band_histogram,
     "dedup_emb_cosine": q_dedup_emb_cosine,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    # -- (e) remaining r2-era rows, refreshed this round.  Five trivial
-    # single-operator r2 queries (count_by_site, distinct_sites,
-    # exists_filter, suffix_filter_rewrite, feature_unpivot) did
-    # not fit the 50-slot window and rotate forward in round 7, as do
-    # pricing_summary_sql (displaced by doc_dup_span_removal's
-    # post-refactor re-verification; its non-SQL twin stays below) and
-    # tpch_q5_regional (displaced by the corpus_bloom_decontaminate
-    # addition; unchanged since r2 and pytest-pinned); all seven are
-    # continuously pinned by test_oracle_parity --
+    "dedup_incremental_persisted": q_dedup_incremental_persisted,
+    "doc_chunks_udtf": q_doc_chunks_udtf,
+    "doc_rarity_quality": q_doc_rarity_quality,
+    "doc_tfidf_topterms": q_doc_tfidf_topterms,
+    "docs_stream_dedup_gate": q_docs_stream_dedup_gate,
+    "emb_ivf_persisted_topk": q_emb_ivf_persisted_topk,
+    "emb_ivfpq_persisted_topk": q_emb_ivfpq_persisted_topk,
+    "emb_ivfpq_topk": q_emb_ivfpq_topk,
+    "emb_pq_persisted_topk": q_emb_pq_persisted_topk,
+    "emb_sq8_topk": q_emb_sq8_topk,
+    "events_bitmap_distinct": _qa.q_events_bitmap_distinct,
+    "events_hourly_heatmap": q_events_hourly_heatmap,
+    "events_regr_trend": _qa.q_events_regr_trend,
+    "events_scd2_intervals": _qa.q_events_scd2_intervals,
+    "events_stream_dedup": q_events_stream_dedup,
+    "events_stream_hopping": q_events_stream_hopping,
+    "events_stream_static": q_events_stream_static,
+    "events_trailing_range_sum": _qa.q_events_trailing_range_sum,
+    "events_trimmed_mean": q_events_trimmed_mean,
+    "events_variant_props": _qa.q_events_variant_props,
+    "ingest_join": q_ingest_join,
+    "lineitem_corr_matrix": _qa.q_lineitem_corr_matrix,
+    "lineitem_dq_checks": _qa.q_lineitem_dq_checks,
+    "lineitem_moving_sum": q_lineitem_moving_sum,
+    "lineitem_percentiles": q_lineitem_percentiles,
+    "lineitem_udaf_wavg": q_lineitem_udaf_wavg,
+    "lineitem_yearly_growth": q_lineitem_yearly_growth,
+    "mm_frame_sample": q_mm_frame_sample,
+    "nation_revenue_share": q_nation_revenue_share,
+    "orders_date_funcs": q_orders_date_funcs,
+    "orders_lateral_topk": _qa.q_orders_lateral_topk,
+    "orders_snapshot_diff": _qa.q_orders_snapshot_diff,
+    "orders_window_funcs": q_orders_window_funcs,
+    "pricing_decimal_exact": _qa.q_pricing_decimal_exact,
+    "ml_cv_tuning": q_ml_cv_tuning,
+    "ml_feature_importance": q_ml_feature_importance,
+    "ml_score_topk": q_ml_score_topk,
+    "ml_train_rmse": q_ml_train_rmse,
+    "pipeline_e2e_score": q_pipeline_e2e_score,
+    "predictions_fold": q_predictions_fold,
+    "pricing_summary": q_pricing_summary,
+    "rank_normalized": q_rank_normalized,
+    "topk_per_group": q_topk_per_group,
+    "tpch_q3_shipping": q_tpch_q3_shipping,
+    "dedup_lsh_recall_sampled": _qa.q_dedup_lsh_recall_sampled,
+    "corpus_shard_divergence": q_corpus_shard_divergence,
+    "basket_part_pairs": q_basket_part_pairs,
+    "corpus_blocklist": q_corpus_blocklist,
+    "corpus_contamination": q_corpus_contamination,
+    "corpus_token_budget": q_corpus_token_budget,
+    "count_by_site": q_count_by_site,
+    "customer_semi_anti": q_customer_semi_anti,
+    "distinct_sites": q_distinct_sites,
+    "doc_array_funcs": q_doc_array_funcs,
+    "emb_pq_topk": q_emb_pq_topk,
+    "emb_pq_train_report": q_emb_pq_train_report,
+    "events_funnel": q_events_funnel,
+    "events_json_props": q_events_json_props,
+    "events_resample_interp": q_events_resample_interp,
+    "events_transitions": q_events_transitions,
+    "events_user_lag": q_events_user_lag,
+    "events_zscore_outliers": q_events_zscore_outliers,
+    "exists_filter": q_exists_filter,
+    "feature_unpivot": q_feature_unpivot,
+    "lineitem_price_histogram": q_lineitem_price_histogram,
+    "lineitem_skew_profile": q_lineitem_skew_profile,
+    "lineitem_stats": q_lineitem_stats,
+    "mm_decode_png": q_mm_decode_png,
+    "nation_set_ops": q_nation_set_ops,
+    "orders_above_cust_avg": q_orders_above_cust_avg,
+    "orders_cohort_retention": q_orders_cohort_retention,
+    "parquet_prune_roundtrip": q_parquet_prune_roundtrip,
+    "pricing_cube": q_pricing_cube,
+    "pricing_rollup": q_pricing_rollup,
+    "pricing_summary_sql": q_pricing_summary_sql,
+    "pysource_stream": q_pysource_stream,
+    "pysource_write_roundtrip": q_pysource_write_roundtrip,
+    "suffix_filter_rewrite": q_suffix_filter_rewrite,
+    "tpch_q22_acctbal": q_tpch_q22_acctbal,
+    "orders_month_spine": _qa.q_orders_month_spine,
+    "orders_pipe_sql": _qa.q_orders_pipe_sql,
+    "orders_pivot_unpivot_sql": _qa.q_orders_pivot_unpivot_sql,
+    "supplier_pareto": _qa.q_supplier_pareto,
+    "tsv_roundtrip": q_tsv_roundtrip,
+    "emb_ivfpq_recall_sampled": q_emb_ivfpq_recall_sampled,
+    "emb_pq_refine_r_sweep": q_emb_pq_refine_r_sweep,
+    "corpus_shard_manifest": q_corpus_shard_manifest,
+    "corpus_shard_append": q_corpus_shard_append,
+    "ml_als_recs": _qa.q_ml_als_recs,
+    "corpus_bloom_decontaminate": q_corpus_bloom_decontaminate,
     "corpus_hash_split": q_corpus_hash_split,
     "customer_balance_merge": q_customer_balance_merge,
     "dedup_exact": q_dedup_exact,
+    "dedup_minhash_lsh": q_dedup_minhash_lsh,
+    "dedup_simhash": q_dedup_simhash,
+    "doc_dup_span_maximal": q_doc_dup_span_maximal,
+    "doc_dup_span_removal": q_doc_dup_span_removal,
     "doc_fingerprint": q_doc_fingerprint,
+    "doc_heavy_hitters": q_doc_heavy_hitters,
     "doc_lang_id": q_doc_lang_id,
     "doc_pii_redact": q_doc_pii_redact,
     "doc_quality": q_doc_quality,
+    "doc_quality_classifier": q_doc_quality_classifier,
     "doc_quality_flags": q_doc_quality_flags,
     "doc_repetition": q_doc_repetition,
     "doc_token_stats": q_doc_token_stats,
     "emb_ann_lsh": q_emb_ann_lsh,
     "emb_centroids": q_emb_centroids,
+    "emb_cosine_topk": q_emb_cosine_topk,
+    "emb_cosine_topk_np": q_emb_cosine_topk_np,
+    "emb_ivf_topk": q_emb_ivf_topk,
+    "emb_kmeans_centroids": q_emb_kmeans_centroids,
     "events_asof_join": q_events_asof_join,
+    "events_orders_cogroup": q_events_orders_cogroup,
     "events_range_join": q_events_range_join,
     "events_resample_ffill": q_events_resample_ffill,
     "events_sessionize": q_events_sessionize,
@@ -9404,704 +9512,26 @@ QUERIES = {
     "feature_pivot": q_feature_pivot,
     "median_crossing": q_median_crossing,
     "mm_decode_meta": q_mm_decode_meta,
-    "mm_decode_png": q_mm_decode_png,
     "mm_media_meta": q_mm_media_meta,
-    "predictions_fold": q_predictions_fold,
-    "pricing_summary": q_pricing_summary,
-    "rank_normalized": q_rank_normalized,
-    "topk_per_group": q_topk_per_group,
-    "tpch_q3_shipping": q_tpch_q3_shipping,
-    "tpch_q5_regional": q_tpch_q5_regional,
-    # -- (f) driver-green in rounds 3-5 (freshest rows; rotate forward
-    # in later rounds as needed) --
-    "corpus_weighted_sample": _qa.q_corpus_weighted_sample,
-    "dedup_lsh_recall_report": _qa.q_dedup_lsh_recall_report,
-    "dedup_lsh_recall_sampled": _qa.q_dedup_lsh_recall_sampled,
-    "events_anomaly_mad": _qa.q_events_anomaly_mad,
-    "events_first_last_touch": _qa.q_events_first_last_touch,
-    "events_median_arrow": _qa.q_events_median_arrow,
-    "events_reach_curve": _qa.q_events_reach_curve,
-    "events_sessionize_dynamic": _qa.q_events_sessionize_dynamic,
-    "events_stream_chained": q_events_stream_chained,
-    "events_stream_rocksdb": _qa.q_events_stream_rocksdb,
-    "lineitem_equidepth_histogram": _qa.q_lineitem_equidepth_histogram,
-    "orders_month_spine": _qa.q_orders_month_spine,
-    "orders_pipe_sql": _qa.q_orders_pipe_sql,
-    "orders_pivot_unpivot_sql": _qa.q_orders_pivot_unpivot_sql,
-    "part_skyline": _qa.q_part_skyline,
-    "dedup_clusters": q_dedup_clusters,
-    "tsv_roundtrip": q_tsv_roundtrip,
-    "dedup_incremental": q_dedup_incremental,
-    "dedup_incremental_persisted": q_dedup_incremental_persisted,
-    "docs_stream_dedup_gate": q_docs_stream_dedup_gate,
-    "docs_stream_dedup_verified": q_docs_stream_dedup_verified,
-    "supplier_pareto": _qa.q_supplier_pareto,
-    "events_ewma": _qa.q_events_ewma,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "corpus_keep_best": q_corpus_keep_best,
-    "corpus_keep_best_pairs": q_corpus_keep_best_pairs,
-    "corpus_dedup_report": q_corpus_dedup_report,
-    "events_sketch_stats": q_events_sketch_stats,
-    "events_approx_stats": q_events_approx_stats,
-    "events_hll_merge": q_events_hll_merge,
-    "mm_audio_windows": q_mm_audio_windows,
-    "part_pagerank": q_part_pagerank,
-    "supplier_fuzzy_pairs": q_supplier_fuzzy_pairs,
-    "doc_dup_span_fraction": q_doc_dup_span_fraction,
-    "events_incremental_agg": q_events_incremental_agg,
-    "lineitem_zorder_pruning": q_lineitem_zorder_pruning,
-    "orders_bucketed_join": q_orders_bucketed_join,
-    "emb_ivf_recall_report": q_emb_ivf_recall_report,
-    "emb_ivfpq_recall_report": q_emb_ivfpq_recall_report,
-    "emb_ivfpq_recall_sampled": q_emb_ivfpq_recall_sampled,
-    "orders_capped_balance": q_orders_capped_balance,
-    "dedup_semdedup": q_dedup_semdedup,
-    "docs_schema_evolution": q_docs_schema_evolution,
-    "docs_compaction": q_docs_compaction,
-    "corpus_temperature_sample": q_corpus_temperature_sample,
-    # pricing_summary_sql spilled from the 50-slot window to make room
-    # for doc_dup_span_removal's post-refactor re-verification: it is
-    # the SQL-frontend twin of pricing_summary (same relation, same
-    # oracle), which STAYS in the window, and test_oracle_parity pins
-    # it continuously regardless of position.
-    "pricing_summary_sql": q_pricing_summary_sql,
-    "corpus_pack_sequences": q_corpus_pack_sequences,
-    "corpus_source_quota": q_corpus_source_quota,
-    "corpus_profile": q_corpus_profile,
-    "doc_string_funcs": q_doc_string_funcs,
-    "doc_bm25_topk": q_doc_bm25_topk,
-    "events_time_rollup": q_events_time_rollup,
-    "lineitem_price_histogram": q_lineitem_price_histogram,
-    "corpus_blocklist": q_corpus_blocklist,
-    "orders_cohort_retention": q_orders_cohort_retention,
-    "dedup_ngram_capped": q_dedup_ngram_capped,
-    "pysource_stream": q_pysource_stream,
-    "events_transitions": q_events_transitions,
-    "basket_part_pairs": q_basket_part_pairs,
-    "events_resample_interp": q_events_resample_interp,
-    "lineitem_skew_profile": q_lineitem_skew_profile,
-    "dedup_simhash_pairs": q_dedup_simhash_pairs,
-    "corpus_token_budget": q_corpus_token_budget,
-    "corpus_bpe_budget": q_corpus_bpe_budget,
-    "corpus_shard_manifest": q_corpus_shard_manifest,
-    "corpus_shard_append": q_corpus_shard_append,
-    "corpus_bpe_pack": q_corpus_bpe_pack,
-    "corpus_dsir_select": q_corpus_dsir_select,
-    "corpus_dsir_resample": q_corpus_dsir_resample,
-    "corpus_ccnet_buckets": q_corpus_ccnet_buckets,
-    "dedup_ngram_containment": q_dedup_ngram_containment,
-    "corpus_epoch_upsample": q_corpus_epoch_upsample,
-    "corpus_shard_divergence": q_corpus_shard_divergence,
-    "corpus_interleave": q_corpus_interleave,
-    "doc_array_funcs": q_doc_array_funcs,
-    "corpus_contamination": q_corpus_contamination,
-    "pricing_rollup": q_pricing_rollup,
-    "customer_semi_anti": q_customer_semi_anti,
-    "nation_set_ops": q_nation_set_ops,
     "orders_salted_join": q_orders_salted_join,
-    "events_funnel": q_events_funnel,
-    "lineitem_stats": q_lineitem_stats,
-    "events_user_lag": q_events_user_lag,
-    "events_json_props": q_events_json_props,
-    "events_zscore_outliers": q_events_zscore_outliers,
-    "tpch_q6_forecast": q_tpch_q6_forecast,
-    "tpch_q10_returns": q_tpch_q10_returns,
-    "tpch_q13_custdist": q_tpch_q13_custdist,
-    "tpch_q22_acctbal": q_tpch_q22_acctbal,
-    "pricing_cube": q_pricing_cube,
-    "orders_above_cust_avg": q_orders_above_cust_avg,
-    "tpch_q2_min_cost": q_tpch_q2_min_cost,
-    "tpch_q4_priority": q_tpch_q4_priority,
-    "tpch_q7_volume": q_tpch_q7_volume,
-    "tpch_q8_share": q_tpch_q8_share,
-    "tpch_q9_profit": q_tpch_q9_profit,
-    "feature_unpivot": q_feature_unpivot,
-    "exists_filter": q_exists_filter,
-    "count_by_site": q_count_by_site,
-    "distinct_sites": q_distinct_sites,
-    "suffix_filter_rewrite": q_suffix_filter_rewrite,
-    "tpch_q11_important": q_tpch_q11_important,
-    "tpch_q12_priority": q_tpch_q12_priority,
-    "tpch_q15_top_supplier": q_tpch_q15_top_supplier,
-    "tpch_q16_supplier_cnt": q_tpch_q16_supplier_cnt,
     "tpch_q17_small_qty": q_tpch_q17_small_qty,
+    "tpch_q18_bigorders": q_tpch_q18_bigorders,
     "tpch_q19_disjunctive": q_tpch_q19_disjunctive,
     "tpch_q20_excess": q_tpch_q20_excess,
     "tpch_q21_waiting": q_tpch_q21_waiting,
-    "orders_window_funcs": q_orders_window_funcs,
-    "lineitem_moving_sum": q_lineitem_moving_sum,
-    "orders_date_funcs": q_orders_date_funcs,
-    "corpus_stratified_sample": q_corpus_stratified_sample,
-    "lineitem_percentiles": q_lineitem_percentiles,
-    "pricing_grouping_sets": q_pricing_grouping_sets,
-    "events_hourly_heatmap": q_events_hourly_heatmap,
-    "doc_chunks_udtf": q_doc_chunks_udtf,
-    "mm_frame_sample": q_mm_frame_sample,
-    "emb_sq8_topk": q_emb_sq8_topk,
-    "events_stream_dedup": q_events_stream_dedup,
-    "doc_tfidf_topterms": q_doc_tfidf_topterms,
-    "lineitem_yearly_growth": q_lineitem_yearly_growth,
-    "events_trimmed_mean": q_events_trimmed_mean,
-    "pysource_scan": q_pysource_scan,
-    "pysource_write_roundtrip": q_pysource_write_roundtrip,
-    "parquet_prune_roundtrip": q_parquet_prune_roundtrip,
-    "ingest_join": q_ingest_join,
-    "nation_revenue_share": q_nation_revenue_share,
-    "tpch_q14_promo": q_tpch_q14_promo,
-    "tpch_q18_bigorders": q_tpch_q18_bigorders,
-    "dedup_simhash64_pairs": q_dedup_simhash64_pairs,
-    "dedup_band_histogram": q_dedup_band_histogram,
-    "doc_rarity_quality": q_doc_rarity_quality,
-    "events_stream_hopping": q_events_stream_hopping,
-    "lineitem_udaf_wavg": q_lineitem_udaf_wavg,
-    "events_stream_static": q_events_stream_static,
-    "events_scd2_intervals": _qa.q_events_scd2_intervals,
-    "events_regr_trend": _qa.q_events_regr_trend,
-    "lineitem_corr_matrix": _qa.q_lineitem_corr_matrix,
-    "events_bitmap_distinct": _qa.q_events_bitmap_distinct,
-    "lineitem_dq_checks": _qa.q_lineitem_dq_checks,
-    "doc_bigram_perplexity": _qa.q_doc_bigram_perplexity,
-    "corpus_vocab_growth": _qa.q_corpus_vocab_growth,
-    "orders_lateral_topk": _qa.q_orders_lateral_topk,
-    "events_trailing_range_sum": _qa.q_events_trailing_range_sum,
-    "events_variant_props": _qa.q_events_variant_props,
-    "customer_rfm": _qa.q_customer_rfm,
-    "orders_snapshot_diff": _qa.q_orders_snapshot_diff,
-    "pricing_decimal_exact": _qa.q_pricing_decimal_exact,
-}
-
-# -- Round-7 driver window (round-6 verdict #1): the ~50 entries below
-# lead ``queries()`` so the driver's correctness window covers (a) the
-# queries added or rewritten this round (no green signal yet), (b) all
-# 41 catalog queries whose latest driver hash predates round 4 — after
-# this sweep every query's hard signal postdates the r4-r5 refactors —
-# and (c) the ML queries whose invariant flags gained degenerate-input
-# guards (ADVICE r6 #2).  Relative order of everything else is kept. --
-_R7_WINDOW = [
-    # (a) new / rewritten in round 7
-    "dedup_emb_cosine",          # scale-adaptive multi-table LSH
-    "corpus_keep_best",          # group-shaped (star edges + CC)
-    "corpus_keep_best_pairs",    # new audit variant
-    "corpus_dedup_report",       # group-shaped report
-    "pysource_write_roundtrip",  # new: two-phase-commit writer row
-    "parquet_prune_roundtrip",   # new: partitioned-sink row
-    "corpus_interleave",         # closed-form mix_rank rewrite
-    "mm_decode_png",             # new: real PNG encode->parse round trip
-    "dedup_simhash64_pairs",     # r7 late: first-colliding-band claiming
-    "dedup_clusters",            # r7 late: consumes the claimed simhash pairs
-    "emb_pq_train_report",       # r7 late: new product-quantization tier
-    "emb_pq_topk",               # r7 late: hash-exact PQ search
-    # (b) stale r2/r3 rows (latest driver hash predates round 4)
-    "count_by_site",
-    "distinct_sites",
-    "exists_filter",
-    "feature_unpivot",
-    "pricing_summary_sql",
-    "suffix_filter_rewrite",
-    "tpch_q5_regional",
-    "basket_part_pairs",
-    "corpus_blocklist",
-    "corpus_contamination",
-    "corpus_token_budget",
-    "customer_semi_anti",
-    "dedup_ngram_capped",
-    "dedup_simhash_pairs",
-    "doc_array_funcs",
-    "events_funnel",
-    "events_json_props",
-    "events_resample_interp",
-    "events_transitions",
-    "events_user_lag",
-    "events_zscore_outliers",
-    "lineitem_price_histogram",
-    "lineitem_skew_profile",
-    "lineitem_stats",
-    "nation_set_ops",
-    "orders_above_cust_avg",
-    "orders_cohort_retention",
-    "orders_salted_join",
-    "pricing_cube",
-    "pricing_rollup",
-    "pysource_stream",
-    "tpch_q10_returns",
-    "tpch_q13_custdist",
-    "tpch_q22_acctbal",
-    "tpch_q2_min_cost",
-    "tpch_q4_priority",
-    "tpch_q6_forecast",
-    "tpch_q7_volume",
-    "tpch_q8_share",
-    "tpch_q9_profit",
-    # (c) ml flag queries with new degenerate-input guards.  These got
-    # fresh hash-green rows in the round-6 window and the guards only
-    # fire on degenerate inputs absent from the driver's sf0.01 corpus
-    # (pytest covers those paths), so when the 50-slot window is tight
-    # they yield to (a)'s this-round rewrites — doc_quality_classifier
-    # already spilled in the original layout, and ml_train_rmse /
-    # emb_kmeans_centroids now sit just past the cutoff for the two
-    # late simhash-claiming rewrites above.
-    "ml_train_rmse",
-    "emb_kmeans_centroids",
-    "doc_quality_classifier",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R7_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R7_WINDOW)},
-}
-
-
-
-# -- Round-8 driver window: leads with (a) the LAST two stale rows —
-# tpch_q8_share / tpch_q9_profit, whose newest driver hash is still r3
-# (they sat at slots 51-52 of the round-7 window, just past the 50-row
-# cutoff) — (b) this round's new/changed queries (the persisted-PQ and
-# persisted-IVF index paths, the combined IVF-ADC tier, the streaming
-# ingest dedup gate; corpus_interleave's overflow-safe mix_rank
-# rearrangement; dedup_emb_cosine's footer-metadata sizing), and
-# (c) the queries whose newest hard signal is r4, oldest-first.  The
-# six late-round additions push the list to 55 for a 50-row window,
-# so the last five r4 rows (tpch_q17/q18/q19/q20/q21) stay r4-signal
-# one more round — pytest parity covers them; new/changed queries
-# outrank re-stamping already-green rows.  Relative order kept. --
-_R8_WINDOW = [
-    "tpch_q8_share",
-    "tpch_q9_profit",
-    "emb_pq_persisted_topk",
-    "emb_ivf_persisted_topk",
-    "emb_ivfpq_topk",
-    "emb_ivfpq_persisted_topk",
-    "docs_stream_dedup_gate",
-    "dedup_incremental_persisted",
-    "corpus_interleave",
-    "dedup_emb_cosine",
-    "corpus_stratified_sample",
-    "corpus_vocab_growth",
-    "customer_rfm",
-    "dedup_band_histogram",
-    "doc_bigram_perplexity",
-    "doc_chunks_udtf",
-    "doc_rarity_quality",
-    "doc_tfidf_topterms",
-    "emb_sq8_topk",
-    "events_bitmap_distinct",
-    "events_hourly_heatmap",
-    "events_regr_trend",
-    "events_scd2_intervals",
-    "events_stream_dedup",
-    "events_stream_hopping",
-    "events_stream_static",
-    "events_trailing_range_sum",
-    "events_trimmed_mean",
-    "events_variant_props",
-    "ingest_join",
-    "lineitem_corr_matrix",
-    "lineitem_dq_checks",
-    "lineitem_moving_sum",
-    "lineitem_percentiles",
-    "lineitem_udaf_wavg",
-    "lineitem_yearly_growth",
-    "mm_frame_sample",
-    "nation_revenue_share",
-    "orders_date_funcs",
-    "orders_lateral_topk",
-    "orders_snapshot_diff",
-    "orders_window_funcs",
-    "pricing_decimal_exact",
-    "pricing_grouping_sets",
-    "pysource_scan",
-    "tpch_q11_important",
-    "tpch_q12_priority",
-    "tpch_q14_promo",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_cnt",
-    "tpch_q17_small_qty",
-    "tpch_q18_bigorders",
-    "tpch_q19_disjunctive",
-    "tpch_q20_excess",
-    "tpch_q21_waiting",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R8_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R8_WINDOW)},
-}
-
-
-# -- Round-9 driver window (round-8 verdict #1): exactly 50 entries.
-# (a) queries whose implementation was rewritten in round 8 but whose
-# newest driver hash is r7, pre-rewrite (the hard signal must postdate
-# the code it certifies): dedup_clusters (simhash_clusters_collapsed)
-# and orders_salted_join (merge-hint pin); (b) rewritten THIS round:
-# the two simhash pair enumerations (signature collapse + expansion);
-# (c) the FIVE round-9 additions (first driver rows): the IVFPQ recall
-# grid, the index-append path, the verified streaming gate, and the
-# two late refine rows; (d) the five r4-stale tpch rows the r8 window
-# listed past its 50-row cutoff; (e) 36 of the 41 queries whose
-# newest hard signal is r5 — FIVE spill to round 10 to hold the 50:
-# orders_month_spine / orders_pipe_sql / orders_pivot_unpivot_sql
-# (single-shape SQL-frontend rows, unchanged since r3) plus
-# supplier_pareto and tsv_roundtrip (bumped for the two late refine
-# additions; see the trailing note in the list).  All five are
-# continuously pinned by test_oracle_parity.  After this sweep every
-# catalog signal is r6+ except those five — sweep them FIRST in the
-# round-10 window. --
-_R9_WINDOW = [
-    # (a) rewritten r8, signal still r7
-    "dedup_clusters",
-    "orders_salted_join",
-    # (b) rewritten r9: signature-collapse pair enumeration
-    "dedup_simhash_pairs",
-    "dedup_simhash64_pairs",
-    # (c) new in r9
-    "emb_ivfpq_recall_report",
-    "emb_ivfpq_append_topk",
-    "docs_stream_dedup_verified",
-    "emb_pq_refine_topk",
-    "emb_pq_refine_recall_report",
-    # (d) r4-stale tail
-    "tpch_q17_small_qty",
-    "tpch_q18_bigorders",
-    "tpch_q19_disjunctive",
-    "tpch_q20_excess",
-    "tpch_q21_waiting",
-    # (e) r5-stale sweep (alphabetical)
-    "corpus_pack_sequences",
-    "corpus_profile",
-    "corpus_source_quota",
-    "corpus_temperature_sample",
-    "corpus_weighted_sample",
-    "dedup_incremental",
-    "dedup_lsh_recall_report",
-    "dedup_ngram_jaccard",
-    "dedup_semdedup",
-    "doc_bm25_topk",
-    "doc_dup_span_fraction",
-    "doc_string_funcs",
-    "docs_compaction",
-    "docs_schema_evolution",
-    "emb_ivf_recall_report",
-    "events_anomaly_mad",
-    "events_approx_stats",
-    "events_ewma",
-    "events_first_last_touch",
-    "events_hll_merge",
-    "events_incremental_agg",
-    "events_median_arrow",
-    "events_reach_curve",
-    "events_sessionize_dynamic",
-    "events_sketch_stats",
-    "events_stream_chained",
-    "events_stream_rocksdb",
-    "events_time_rollup",
-    "lineitem_equidepth_histogram",
-    "lineitem_zorder_pruning",
-    "mm_audio_windows",
-    "orders_bucketed_join",
-    "orders_capped_balance",
-    "part_pagerank",
-    "part_skyline",
-    "supplier_fuzzy_pairs",
-    # supplier_pareto and tsv_roundtrip spill to round 10 for the late emb_pq_refine_topk
-    # additions (new rows need their first signal; both spilled rows
-    # are r5-green, unchanged, and pinned by oracle parity)
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R9_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R9_WINDOW)},
-}
-
-# -- Round-10 driver window (first 50 entries get this round's driver
-# correctness rows).  Ordering: (a) the FIVE r5-stale rows the r9
-# window spilled (the round-9 verdict's #1 ask — S1/S3 TSV fidelity
-# and the SQL-frontend breadth rows); (b) the THREE round-10
-# additions needing their first signal (the sampled recall audits,
-# the refinement R-sweep, and the BPE budget row); (c) ml_als_recs,
-# touched this round (variance stabilization, round-9 verdict #2);
-# (d) 41 of the 48 remaining queries whose newest hard signal is r6
-# (alphabetical).  SEVEN r6 rows spill to round 11 to hold the 50 —
-# chosen as the rows whose correctness surface is ALSO re-pinned
-# every round outside the window: rank_normalized is entry(), smoke-
-# checked by the driver each round; predictions_fold is pinned by the
-# golden reference-TSV end-to-end test; the five ML/pipeline rows
-# (ml_train_rmse, ml_score_topk, ml_cv_tuning, ml_feature_importance,
-# pipeline_e2e_score) are invariant-pinned in pytest and run in full
-# in every suite pass.  Sweep those seven FIRST in the round-11
-# window. --
-_R10_WINDOW = [
-    # (a) r5-stale spill from round 9
-    "orders_month_spine",
-    "orders_pipe_sql",
-    "orders_pivot_unpivot_sql",
-    "supplier_pareto",
-    "tsv_roundtrip",
-    # (b) new in r10
-    "emb_ivfpq_recall_sampled",
-    "emb_pq_refine_r_sweep",
-    "corpus_bpe_budget",
-    "corpus_shard_manifest",
-    "corpus_shard_append",
-    "corpus_bpe_pack",
-    # (c) touched in r10
-    "ml_als_recs",
-    # (d) r6-stale sweep (alphabetical)
-    "corpus_bloom_decontaminate",
-    "corpus_hash_split",
-    "customer_balance_merge",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "doc_dup_span_maximal",
-    "doc_dup_span_removal",
-    "doc_fingerprint",
-    "doc_heavy_hitters",
-    "doc_lang_id",
-    "doc_pii_redact",
-    "doc_quality",
-    "doc_quality_classifier",
-    "doc_quality_flags",
-    "doc_repetition",
-    "doc_token_stats",
-    "emb_ann_lsh",
-    "emb_centroids",
-    "emb_cosine_topk",
-    "emb_cosine_topk_np",
-    "emb_ivf_topk",
-    "emb_kmeans_centroids",
-    "events_asof_join",
-    "events_orders_cogroup",
-    "events_range_join",
-    "events_resample_ffill",
-    "events_sessionize",
-    "events_sliding",
-    "events_stream_join",
-    "events_stream_sessionize",
-    "events_stream_stateful",
-    "events_stream_tumbling",
-    "events_tumbling",
-    "feature_pivot",
-    "median_crossing",
-    "mm_decode_meta",
-    "mm_media_meta",
-    "pricing_summary",
-    "topk_per_group",
-    "tpch_q3_shipping",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R10_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R10_WINDOW)},
-}
-
-# -- Round-11 driver window (first 50 entries get this round's driver
-# correctness rows).  Ordering: (a) the TEN rows whose newest driver
-# row is r6 — the reference-pipeline core the round-10 verdict's #1
-# ask names (the r10 window listed three of them, but the driver runs
-# exactly 50 and they sat at positions 51-53); (b) round-11 additions
-# needing their first signal; (c) 37 of the 44 rows whose newest
-# driver row is r7 (alphabetical).  SEVEN r7 rows spill to round 12 —
-# chosen as pure-SQL TPC-H shapes (tpch_q2/q4/q5/q6/q7 plus, displaced
-# by the two round-11 curation additions, tpch_q10/q13), unchanged
-# since round 2 and re-pinned by the full oracle-parity pytest run
-# every round.  Sweep those seven FIRST in the round-12 window. --
-_R11_WINDOW = [
-    # (a) r6-stale sweep (round-10 verdict #1)
-    "ml_cv_tuning",
-    "ml_feature_importance",
-    "ml_score_topk",
-    "ml_train_rmse",
-    "pipeline_e2e_score",
-    "predictions_fold",
-    "pricing_summary",
-    "rank_normalized",
-    "topk_per_group",
-    "tpch_q3_shipping",
-    # (b) new in r11
-    "dedup_lsh_recall_sampled",
-    "corpus_dsir_select",
-    "corpus_shard_divergence",
-    # (c) r7-stale sweep (alphabetical; 7 TPC-H rows spill to r12)
-    "basket_part_pairs",
-    "corpus_blocklist",
-    "corpus_contamination",
-    "corpus_dedup_report",
-    "corpus_keep_best",
-    "corpus_keep_best_pairs",
-    "corpus_token_budget",
-    "count_by_site",
-    "customer_semi_anti",
-    "dedup_ngram_capped",
-    "distinct_sites",
-    "doc_array_funcs",
-    "emb_pq_topk",
-    "emb_pq_train_report",
-    "events_funnel",
-    "events_json_props",
-    "events_resample_interp",
-    "events_transitions",
-    "events_user_lag",
-    "events_zscore_outliers",
-    "exists_filter",
-    "feature_unpivot",
-    "lineitem_price_histogram",
-    "lineitem_skew_profile",
-    "lineitem_stats",
-    "mm_decode_png",
-    "nation_set_ops",
-    "orders_above_cust_avg",
-    "orders_cohort_retention",
-    "parquet_prune_roundtrip",
-    "pricing_cube",
-    "pricing_rollup",
-    "pricing_summary_sql",
-    "pysource_stream",
-    "pysource_write_roundtrip",
-    "suffix_filter_rewrite",
-    "tpch_q22_acctbal",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R11_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R11_WINDOW)},
-}
-
-# -- Round-12 driver window (first 50 entries get this round's driver
-# correctness rows).  Ordering: (a) the SEVEN rows whose newest driver
-# row is r7 — the pure-SQL TPC-H shapes the round-11 window spilled
-# (its own note and the round-11 verdict's #2 both order them swept
-# FIRST); (b) the TWO round-12 additions needing their first signal;
-# (c) 41 of the 50 rows whose newest driver row is r8 (alphabetical).
-# The remaining NINE r8 rows spill to round 13 — chosen as the
-# alphabetical tail (pricing_grouping_sets, pysource_scan and seven
-# tpch_* SQL shapes, all unchanged since r8 and re-pinned by the full
-# oracle-parity pytest run every round).  Sweep those FIRST in the
-# round-13 window. --
-_R12_WINDOW = [
-    # (a) r7-stale sweep (round-11 verdict #2)
-    "tpch_q2_min_cost",
-    "tpch_q4_priority",
-    "tpch_q5_regional",
-    "tpch_q6_forecast",
-    "tpch_q7_volume",
-    "tpch_q10_returns",
-    "tpch_q13_custdist",
-    # (b) new in r12
-    "corpus_dsir_resample",
-    "corpus_ccnet_buckets",
-    # (c) r8-stale sweep (alphabetical; 9 rows spill to r13)
-    "corpus_interleave",
-    "corpus_stratified_sample",
-    "corpus_vocab_growth",
-    "customer_rfm",
-    "dedup_band_histogram",
-    "dedup_emb_cosine",
-    "dedup_incremental_persisted",
-    "doc_bigram_perplexity",
-    "doc_chunks_udtf",
-    "doc_rarity_quality",
-    "doc_tfidf_topterms",
-    "docs_stream_dedup_gate",
-    "emb_ivf_persisted_topk",
-    "emb_ivfpq_persisted_topk",
-    "emb_ivfpq_topk",
-    "emb_pq_persisted_topk",
-    "emb_sq8_topk",
-    "events_bitmap_distinct",
-    "events_hourly_heatmap",
-    "events_regr_trend",
-    "events_scd2_intervals",
-    "events_stream_dedup",
-    "events_stream_hopping",
-    "events_stream_static",
-    "events_trailing_range_sum",
-    "events_trimmed_mean",
-    "events_variant_props",
-    "ingest_join",
-    "lineitem_corr_matrix",
-    "lineitem_dq_checks",
-    "lineitem_moving_sum",
-    "lineitem_percentiles",
-    "lineitem_udaf_wavg",
-    "lineitem_yearly_growth",
-    "mm_frame_sample",
-    "nation_revenue_share",
-    "orders_date_funcs",
-    "orders_lateral_topk",
-    "orders_snapshot_diff",
-    "orders_window_funcs",
-    "pricing_decimal_exact",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R12_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R12_WINDOW)},
-}
-
-# -- Round-13 driver window (first 50 entries get this round's driver
-# correctness rows).  Ordering: (a) the NINE rows whose newest driver
-# row is r8 — the alphabetical-tail spill the round-12 window note
-# ordered swept FIRST (round-12 verdict Next #2); (b) the TWO
-# round-13 additions needing their first signal; (c) the TWELVE
-# queries whose implementation changed this round — the shared
-# collapse_dial migration (all collapse consumers) and the ccnet
-# range-rank gate — re-verified under the driver ahead of pure
-# staleness rotation; (d) 27 of the 48 remaining rows whose newest
-# driver row is r9 (alphabetical).  The other 21 r9 rows spill to
-# round 14 (alphabetical tail from events_median_arrow through
-# tpch_q21_waiting) — sweep those FIRST in the round-14 window. --
-_R13_WINDOW = [
-    # (a) r8-stale sweep (round-12 verdict #2)
-    "pricing_grouping_sets",
-    "pysource_scan",
-    "tpch_q8_share",
-    "tpch_q9_profit",
-    "tpch_q11_important",
-    "tpch_q12_priority",
-    "tpch_q14_promo",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_cnt",
-    # (b) new in r13
-    "dedup_ngram_containment",
-    "corpus_epoch_upsample",
-    # (c) implementation changed in r13 (collapse_dial migration +
-    # ccnet range-rank gate)
-    "corpus_ccnet_buckets",
-    "corpus_bpe_budget",
-    "corpus_bpe_pack",
-    "corpus_dedup_report",
-    "corpus_dsir_resample",
-    "corpus_dsir_select",
-    "corpus_keep_best",
-    "corpus_keep_best_pairs",
-    "dedup_lsh_recall_report",
-    "dedup_ngram_capped",
-    "dedup_ngram_jaccard",
-    "doc_bigram_perplexity",
-    # (d) r9-stale sweep (alphabetical; 21 rows spill to r14)
-    "corpus_pack_sequences",
-    "corpus_profile",
-    "corpus_source_quota",
-    "corpus_temperature_sample",
-    "corpus_weighted_sample",
-    "dedup_clusters",
-    "dedup_incremental",
-    "dedup_semdedup",
-    "dedup_simhash64_pairs",
-    "dedup_simhash_pairs",
-    "doc_bm25_topk",
-    "doc_dup_span_fraction",
-    "doc_string_funcs",
-    "docs_compaction",
-    "docs_schema_evolution",
-    "docs_stream_dedup_verified",
-    "emb_ivf_recall_report",
-    "emb_ivfpq_append_topk",
-    "emb_ivfpq_recall_report",
-    "emb_pq_refine_recall_report",
-    "emb_pq_refine_topk",
-    "events_anomaly_mad",
-    "events_approx_stats",
-    "events_ewma",
-    "events_first_last_touch",
-    "events_hll_merge",
-    "events_incremental_agg",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _R13_WINDOW},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R13_WINDOW)},
+    "events_median_arrow": _qa.q_events_median_arrow,
+    "events_reach_curve": _qa.q_events_reach_curve,
+    "events_sessionize_dynamic": _qa.q_events_sessionize_dynamic,
+    "events_sketch_stats": q_events_sketch_stats,
+    "events_stream_chained": q_events_stream_chained,
+    "events_stream_rocksdb": _qa.q_events_stream_rocksdb,
+    "events_time_rollup": q_events_time_rollup,
+    "lineitem_equidepth_histogram": _qa.q_lineitem_equidepth_histogram,
+    "lineitem_zorder_pruning": q_lineitem_zorder_pruning,
+    "mm_audio_windows": q_mm_audio_windows,
+    "orders_bucketed_join": q_orders_bucketed_join,
+    "orders_capped_balance": q_orders_capped_balance,
+    "part_pagerank": q_part_pagerank,
+    "part_skyline": _qa.q_part_skyline,
+    "supplier_fuzzy_pairs": q_supplier_fuzzy_pairs,
 }

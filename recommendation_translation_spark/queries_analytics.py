@@ -4,9 +4,9 @@ matrix, Pareto concentration), data-quality constraint checking
 (Deequ-style), exact-distinct at scale (bitmap aggregation), and two
 LLM-corpus scores (bigram-LM perplexity, Heaps-law vocabulary growth).
 
-Registered into the main catalog by ``queries.py`` (import at module
-end there); every entry ships a DuckDB oracle following the
-cross-engine conventions documented at ``queries.py:1-27``.
+Listed in the main catalog by ``queries.py``, whose ``QUERIES`` literal
+names each builder as ``_qa.q_*``; every entry ships a DuckDB oracle
+following the cross-engine conventions documented at ``queries.py:1-27``.
 
 These extend the reference's analytic surface (SURVEY.md §2 has no
 statistical/temporal-modeling operators; the closest is the W1/W2
@@ -1573,37 +1573,3 @@ ANALYTICS_ORACLES["corpus_weighted_sample"] = f"""
           FROM k)
     WHERE rk <= 200
 """
-
-
-ANALYTICS_QUERIES = {
-    "events_scd2_intervals": q_events_scd2_intervals,
-    "events_ewma": q_events_ewma,
-    "events_regr_trend": q_events_regr_trend,
-    "lineitem_corr_matrix": q_lineitem_corr_matrix,
-    "supplier_pareto": q_supplier_pareto,
-    "events_bitmap_distinct": q_events_bitmap_distinct,
-    "lineitem_dq_checks": q_lineitem_dq_checks,
-    "doc_bigram_perplexity": q_doc_bigram_perplexity,
-    "corpus_vocab_growth": q_corpus_vocab_growth,
-    "orders_lateral_topk": q_orders_lateral_topk,
-    "events_trailing_range_sum": q_events_trailing_range_sum,
-    "events_stream_rocksdb": q_events_stream_rocksdb,
-    "events_variant_props": q_events_variant_props,
-    "customer_rfm": q_customer_rfm,
-    "orders_snapshot_diff": q_orders_snapshot_diff,
-    "ml_als_recs": q_ml_als_recs,
-    "pricing_decimal_exact": q_pricing_decimal_exact,
-    "part_skyline": q_part_skyline,
-    "lineitem_equidepth_histogram": q_lineitem_equidepth_histogram,
-    "events_first_last_touch": q_events_first_last_touch,
-    "orders_month_spine": q_orders_month_spine,
-    "dedup_lsh_recall_report": q_dedup_lsh_recall_report,
-    "dedup_lsh_recall_sampled": q_dedup_lsh_recall_sampled,
-    "events_median_arrow": q_events_median_arrow,
-    "events_anomaly_mad": q_events_anomaly_mad,
-    "orders_pipe_sql": q_orders_pipe_sql,
-    "events_sessionize_dynamic": q_events_sessionize_dynamic,
-    "events_reach_curve": q_events_reach_curve,
-    "orders_pivot_unpivot_sql": q_orders_pivot_unpivot_sql,
-    "corpus_weighted_sample": q_corpus_weighted_sample,
-}

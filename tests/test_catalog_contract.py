@@ -3,6 +3,9 @@ correctness driver consumes stays internally consistent."""
 
 from __future__ import annotations
 
+import ast
+import hashlib
+
 import __spark_entry__ as entry_mod
 
 from recommendation_translation_spark.queries import ORACLES, QUERIES
@@ -23,6 +26,40 @@ from recommendation_translation_spark.queries import ORACLES, QUERIES
 # doc_heavy_hitters (r5, exact twins + deterministic error-bound
 # flags).
 ROWS_ONLY: dict[str, str] = {}
+
+
+# The catalog order is part of the contract: the correctness driver
+# checks the first 50 entries of queries().  When the window is rotated
+# on purpose (by moving entries within the QUERIES literal), regenerate
+# both pins with
+#   python -c "import hashlib; from recommendation_translation_spark.queries import QUERIES; print(len(QUERIES), hashlib.sha256('\n'.join(QUERIES).encode()).hexdigest())"
+CATALOG_SIZE = 211
+CATALOG_ORDER_SHA256 = "d15bebbb71495c14a4b19c1ed02b5dc1976f2575b0078c92ef5b47388d421914"
+
+
+def test_catalog_order_is_pinned():
+    assert len(QUERIES) == CATALOG_SIZE
+    digest = hashlib.sha256("\n".join(QUERIES).encode()).hexdigest()
+    assert digest == CATALOG_ORDER_SHA256, "catalog order changed"
+
+
+def test_queries_is_bound_once():
+    """One ordered literal, no stacked reorder blocks."""
+    import recommendation_translation_spark.queries as qmod
+
+    with open(qmod.__file__) as fh:
+        tree = ast.parse(fh.read())
+    bindings = [
+        node.lineno
+        for node in ast.walk(tree)
+        for target in (
+            node.targets if isinstance(node, ast.Assign)
+            else [node.target] if isinstance(node, (ast.AnnAssign, ast.AugAssign))
+            else []
+        )
+        if isinstance(target, ast.Name) and target.id == "QUERIES"
+    ]
+    assert len(bindings) == 1, f"QUERIES bound at lines {bindings}"
 
 
 def test_every_query_has_oracle_or_documented_reason():

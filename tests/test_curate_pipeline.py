@@ -82,3 +82,14 @@ def test_curate_corpus_end_to_end(spark, tmp_path):
         F.array_contains(F.split(F.lower("text"), r"\s+"), "slow")
     ).count()
     assert n_blocked == 0
+
+
+def test_curate_corpus_default_mix(spark, tmp_path):
+    """With no mix_weights every source interleaves at weight 1."""
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    stats = curate_corpus(spark, docs, str(tmp_path / "curated"))
+    assert stats["input"] == docs.count()
+    assert stats["kept"] > 0
+    manifest = spark.read.parquet(str(tmp_path / "curated" / "manifest.parquet"))
+    ranks = [r.mix_rank for r in manifest.select("mix_rank").collect()]
+    assert sorted(ranks) == list(range(1, stats["kept"] + 1))

@@ -541,6 +541,21 @@ def test_interleave_non_divisor_weights_equal_global_window(spark):
     assert ranks == [1, 2, 3]
 
 
+def test_interleave_empty_weights_equal_unit_weights(spark):
+    """An empty weight map (curate_corpus's default mix) means every
+    source at weight 1, not a malformed CASE with no WHEN arm."""
+    from recommendation_translation_spark.operators.curation import (
+        interleave_sources,
+    )
+
+    rows = [(i, ["a", "b", "c"][i % 3] if i % 7 else "b") for i in range(60)]
+    df = spark.createDataFrame(rows, "doc_id long, source string")
+    cols = ["doc_id", "source", "vpos", "mix_rank"]
+    got = interleave_sources(df, "source", {}).select(cols).collect()
+    unit = interleave_sources(df, "source", {"a": 1, "b": 1, "c": 1})
+    assert sorted(got) == sorted(unit.select(cols).collect())
+
+
 def test_encode_png_is_well_formed_and_round_trips():
     """encode_png emits spec-valid PNGs: every chunk CRC verifies, the
     IDAT inflates to exactly height*(1+width) filter-0 scanline bytes,
