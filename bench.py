@@ -9,7 +9,8 @@
 
 Schema v2 (round-6 ADVICE #1): the headline key is named for what it
 measures — ``sum_query_sec`` is the sum of recorded per-query times
-(each possibly the min of two runs under the quiet-host protocol);
+(each the min over its attempts under the shared quiet-host protocol,
+``bench_common.measure_protocol``, which tools_bench_sf1.py uses too);
 ``loop_wall_sec`` is the raw loop wall clock including re-measures.
 v1 sidecars called the former ``total_wall_sec``, silently changing
 its meaning when the quiet-host protocol landed — do not compare a v1
@@ -24,20 +25,119 @@ run; later runs must stay within 2x.
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import sys
 import time
 
+from recommendation_translation_spark.bench_common import (
+    NEVER_REMEASURE,
+    host_probe as _host_probe,
+    hygiene,
+    measure_protocol,
+    probe_factor,
+    probe_factor_clamped,
+    probe_factor_raw,
+    run_order,
+    same_probe_class,
+    warmup,
+)
 from recommendation_translation_spark.session import get_spark
+
+SIDECAR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                       "BENCH_QUERIES.json")
+
+# Rows that have repeatedly measured ~2-3x their quiet-host best under
+# co-tenant load even with a healthy prior (the 1.5x trigger only fires
+# against an inflated FIRST measurement, not a merely-unlucky one):
+# they run as ``volatile`` rows of the shared protocol, min of up to
+# VOLATILE_ATTEMPTS (round-5 verdict #6 — corpus_token_budget measured
+# 2.66 s r3 / 2.94 s r5 vs 1.76 s quiet with an audited-sound plan).
+VOLATILE_ROWS = {"corpus_token_budget"}
+
+
+def measure_row(name: str, run_fn, ref: float | None, *, once: bool = False,
+                sleep=time.sleep) -> dict:
+    """One bench row through the shared ``measure_protocol``, with the
+    quiet-host policy described as protocol flags: a row with no prior
+    ``ref`` runs volatile against ``ref=inf`` (exactly best-of-2, so a
+    contended first measurement cannot poison the recorded baseline);
+    ``VOLATILE_ROWS`` run volatile against their prior;
+    ``NEVER_REMEASURE`` rows, and every row when ``once`` is set, take
+    one attempt.  The host-storm check is the fence's, never bench's.
+    A failed streaming row (fresh memory sink; environment-flaky
+    Python-worker socket timeouts, round-3) gets ONE more protocol
+    pass before it is recorded as a failure."""
+
+    def protocol() -> dict:
+        return measure_protocol(
+            run_fn,
+            lambda: False,
+            math.inf if ref is None else ref,
+            volatile=ref is None or name in VOLATILE_ROWS,
+            never_remeasure=once or name in NEVER_REMEASURE,
+            sleep=sleep,
+        )
+
+    res = protocol()
+    if res["sec"] < 0 and "stream" in name:
+        again = protocol()
+        for k in ("attempts", "errors"):
+            again[k] = res[k] + again[k]
+        again["failures"] += res["failures"]
+        res = again
+    return res
+
+
+def _positive(m: dict) -> dict[str, float]:
+    return {k: v for k, v in m.items() if isinstance(v, (int, float)) and v > 0}
+
+
+def best_maps(
+    timings: dict[str, float], side: dict, host_probe: dict, cpus: int
+) -> tuple[dict[str, float], dict[str, float], bool]:
+    """The sidecar's ``best`` and ``best_all_hosts`` maps after this
+    run, plus whether ``best`` merged with the prior sidecar ``side``.
+    ``best`` is keyed BY PROBE CLASS AND CORE COUNT (round-11 verdict
+    #3, r14 verdict #2-#4): a historical minimum from a faster host or
+    a different core count understates this run's cost, so minima only
+    merge when the prior has the same probe class and the same
+    ``cpus``; a prior without ``cpus`` never merges.  Otherwise the map
+    is re-seeded from this run, and ``best_all_hosts`` keeps the
+    cross-host minima for the audit trail.  ``NEVER_REMEASURE`` rows
+    take this run's cold value: warm-poisoned historical entries
+    (0.24 s against a ~3 s cold measurement) could never be repaired
+    by min()."""
+    merge = side.get("cpus") == cpus and same_probe_class(
+        host_probe, side.get("best_probe") or side.get("host_probe")
+    )
+    prior_best = _positive(side.get("best") or side.get("queries", {}))
+    prior_all = _positive(side.get("best_all_hosts") or side.get("best")
+                          or side.get("queries", {}))
+
+    def fold(prior: dict[str, float]) -> dict[str, float]:
+        return {
+            k: round(v if k in NEVER_REMEASURE else min(v, prior.get(k, v)), 3)
+            for k, v in timings.items() if v > 0
+        }
+
+    return fold(prior_best if merge else {}), fold(prior_all), merge
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
+    # SPARK_GRAFT_BENCH_ONCE=1 disables the quiet-host re-measure:
+    # scale-sweep runs (tools_gen_scale_data.py tiles the tables, then
+    # per-SF subset bench invocations produce the SCALE.md table)
+    # compare one measurement per SF, and the committed sf0.1 priors
+    # would otherwise flag nearly every query at other scale factors.
+    once = os.environ.get("SPARK_GRAFT_BENCH_ONCE") == "1"
 
     spark = get_spark(app_name="bench")
+    cpus = spark.sparkContext.defaultParallelism
     import __spark_entry__ as entry_mod
 
     # Untimed warmup (shared helper since round-11 — the host probe is
@@ -45,8 +145,6 @@ def main() -> int:
     # cache, dominant plan shapes, the Python worker daemon, and the
     # Arrow driver-collection path — one-time costs that would
     # otherwise land on whichever query runs first.
-    from recommendation_translation_spark.bench_common import warmup
-
     warmup(spark, sf_dir)
 
     # HOST PROBE (round-10; shared helper since round-11 — ADVICE #3):
@@ -57,19 +155,13 @@ def main() -> int:
     # inflated every raw ratio (round 10: 48 re-measures, 1.685
     # headline at unchanged code).  Ratios are now reported BOTH raw
     # and probe-normalized; the over-2x fence uses the normalized one.
-    from recommendation_translation_spark.bench_common import (
-        host_probe as _host_probe,
-        probe_factor,
-        probe_factor_raw,
-        same_probe_class,
-    )
-
     host_probe = _host_probe(spark)
     # factor vs the BASELINE.md anchor class (clamped, see bench_common);
     # r14: the RAW factor rides beside it in the sidecar/summary so a
     # clamp saturation is always visible (r13 verdict #7)
     anchor_factor = probe_factor(host_probe)
     anchor_factor_raw = probe_factor_raw(host_probe)
+    clamped = probe_factor_clamped(anchor_factor, anchor_factor_raw)
 
     qmap = entry_mod.queries()
     only = sys.argv[1:]  # optional subset: bench.py q1 q2 ...
@@ -83,179 +175,53 @@ def main() -> int:
     # historical best rather than the previous round's numbers matters:
     # one fully-contended round would otherwise poison the next round's
     # trigger (every inflated prior makes the 1.5x test vacuous).  A
-    # query measuring >1.5x its best (plus a 0.2 s floor so sub-100 ms
-    # noise never triggers) is re-run once and the MIN of the two
-    # CURRENT measurements is recorded — a real regression reproduces
-    # and stays visible; a co-tenant CPU burst doesn't.  New queries
-    # (no prior) also get best-of-2 so a contended first measurement
-    # can't poison the recorded baseline.
-    # Queries that have repeatedly measured ~2-3x their quiet-host best
-    # under co-tenant load even when their prior is healthy (the 1.5x
-    # trigger only fires against an inflated FIRST measurement, not a
-    # merely-unlucky one): always take best-of-2 (round-5 verdict #6 —
-    # corpus_token_budget measured 2.66 s r3 / 2.94 s r5 vs 1.76 s
-    # quiet with an unchanged, audited-sound plan).
-    ALWAYS_BEST_OF_2 = {"corpus_token_budget"}
-    # Queries whose cost is a Python-side memo (the _ML_CACHE model
-    # store) are NEVER re-measured: their second run is warm through a
-    # mechanism clearCache cannot reach, so a best-of-2 min would hide
-    # the one-time training cost the row exists to measure (the cold
-    # BASELINE.md anchor for ml_train_rmse is ~9 s; the warm min was
-    # recording 0.36 s).
-    NEVER_REMEASURE = {"ml_train_rmse"}
-    prior: dict[str, float] = {}
-    prior_probe: dict[str, float] | None = None
-    prior_best_all: dict[str, float] = {}
+    # row over the trigger is re-run and the MIN of the CURRENT
+    # measurements is recorded — a real regression reproduces and
+    # stays visible; a co-tenant CPU burst doesn't.
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_QUERIES.json")) as fh:
+        with open(SIDECAR) as fh:
             side = json.load(fh)
-            prior = {
-                k: v
-                for k, v in (side.get("best") or side.get("queries", {})).items()
-                if isinstance(v, (int, float)) and v > 0
-            }
-            prior_best_all = {
-                k: v
-                for k, v in (side.get("best_all_hosts") or side.get("best")
-                             or side.get("queries", {})).items()
-                if isinstance(v, (int, float)) and v > 0
-            }
-            # probe class the "best" map belongs to: explicit key when
-            # present, else the run's own host_probe (pre-r11 sidecars)
-            prior_probe = side.get("best_probe") or side.get("host_probe")
     except (OSError, ValueError):
-        pass
+        side = {}
+    prior = _positive(side.get("best") or side.get("queries", {}))
+    # probe class the "best" map belongs to: explicit key when present,
+    # else the run's own host_probe (pre-r11 sidecars)
+    prior_probe = side.get("best_probe") or side.get("host_probe")
     # Cross-host trigger normalization (round-11 verdict #3): the 1.5x
     # re-measure trigger compares against the prior best map, which was
     # recorded on the prior sidecar's machine class — scale it by the
     # probe ratio so a host step doesn't fire ~50 spurious re-measures
     # (round 10) or, on a faster host, mask a real regression.
     prior_factor = probe_factor(host_probe, prior_probe) if prior_probe else 1.0
-    prior_raw = dict(prior)  # unscaled, for the per-class best merge
     if prior_factor != 1.0:
         prior = {k: round(v * prior_factor, 3) for k, v in prior.items()}
         print(f"# prior best map scaled by probe factor {prior_factor} "
               f"(host class change)", file=sys.stderr)
     t_all = time.perf_counter()
-    # Sorted order, NOT dict order: the queries() dict rotates across
-    # rounds for the correctness driver's window, and per-query timings
-    # are only comparable round-over-round if every query keeps its
-    # position (the first heavy queries pay JIT/codegen warmup).
-    # Exception: ml_train_rmse runs before every other ml_* query —
-    # they share the memoized model cache, and training cost must land
-    # on the training row, not on whichever consumer sorts first.
-    names = sorted(qmap)
-    ml = [n for n in names if n.startswith("ml_")]
-    if "ml_train_rmse" in ml and ml[0] != "ml_train_rmse":
-        names.remove("ml_train_rmse")
-        names.insert(names.index(ml[0]), "ml_train_rmse")
-    def measure_once(fn):
-        """ONE cold measurement under the loop protocol (round-11
-        ADVICE #3: this block existed as three near-verbatim copies —
-        first run, quiet-host re-measure, backoff retry — so a hygiene
-        fix to one silently skipped the others).  Cache hygiene first:
-        operators cache internal frames (e.g. the shingle stream)
-        rebuilt per query, so earlier queries' entries are dead weight
-        that grows GC/memory pressure across the loop — one observed
-        symptom was a mid-panel query measuring 4x slow on BOTH its
-        runs yet normal in isolation; clearing costs microseconds.
-        Memory-sink tables from earlier streaming drains hold full
-        result sets in driver memory with no TTL (clearCache does not
-        touch temp views) — drop them too.  Returns (seconds, rows) on
-        success, (None, exception) on failure."""
-        from recommendation_translation_spark.streaming.events_stream import (
-            drop_memory_sink_tables,
-        )
-
-        spark.catalog.clearCache()
-        drop_memory_sink_tables(spark)
-        # r13: release the PREVIOUS queries' leaked blocks before
-        # timing.  localCheckpoint blocks are RDD-level state that
-        # clearCache cannot reach; they are freed by the ContextCleaner
-        # only after a JVM GC notices the dead references, which on a
-        # 48 g heap can lag dozens of queries — measured mid-loop rows
-        # at 2-5x their isolated cost (corpus_bpe_budget 13.6 s in-loop
-        # vs 2.6 s isolated) from exactly this accumulation.  A Python
-        # collect drops the py4j handles, then one explicit JVM GC lets
-        # the cleaner unpersist everything unreferenced.  Referenced
-        # state (the ml model memo) is untouched — GC frees garbage
-        # only — so no timed computation is ever satisfied from a
-        # prior run; this is the same between-query hygiene as
-        # clearCache, one layer lower.
-        import gc as _gc
-
-        _gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        try:
-            n = fn(spark, sf_dir).count()
-        except Exception as exc:  # noqa: BLE001 — recorded, never fatal
-            return None, exc
-        return round(time.perf_counter() - t0, 3), n
-
-    for name in names:
+    for name in run_order(n for n in qmap if not only or n in only):
         fn = qmap[name]
-        if only and name not in only:
-            continue
-        # Streaming queries replay through a fresh memory sink and can
-        # hit environment-flaky Python-worker socket timeouts (round-3
-        # BENCH tail) — give them one retry before recording a failure.
-        attempts = 2 if "stream" in name else 1
-        for attempt in range(attempts):
-            t, res = measure_once(fn)
-            if t is not None:
-                timings[name] = t
-                print(f"# {name}: {t}s rows={res}", file=sys.stderr)
-                break
-            if attempt + 1 == attempts:
-                timings[name] = -1.0
-                # One line, truncated: a full Java stack trace here
-                # burned most of the driver's bounded stdout/stderr
-                # tail in round 3 and cost the final JSON line.
-                msg = " ".join(str(res).split())[:200]
-                print(f"# FAILED {name}: {msg}", file=sys.stderr)
-        t = timings[name]
+        rows: dict[str, int] = {}
+
+        def timed_run() -> float:
+            hygiene(spark)
+            t0 = time.perf_counter()
+            rows["n"] = fn(spark, sf_dir).count()
+            return round(time.perf_counter() - t0, 3)
+
         ref = prior.get(name)
-        # SPARK_GRAFT_BENCH_ONCE=1 disables the quiet-host re-measure:
-        # scale-sweep runs (tools_gen_scale_data.py tiles the tables,
-        # then per-SF subset bench invocations produce the SCALE.md
-        # table) compare one measurement per SF, and the committed
-        # sf0.1 priors would otherwise flag nearly every query at
-        # other scale factors.
-        if os.environ.get("SPARK_GRAFT_BENCH_ONCE") == "1":
-            continue
-        if t > 0 and name not in NEVER_REMEASURE and (
-            ref is None or t > 1.5 * ref + 0.2 or name in ALWAYS_BEST_OF_2
-        ):
-            # cold re-run under the SAME protocol as first runs
-            # (measure_once clears caches + memory-sink tables) so
-            # best-of-2 never records a warm-cache min and a flagged
-            # STREAMING query's re-run does not execute with its first
-            # run's memory-sink table still resident (round-7 advisor)
-            t2, _ = measure_once(fn)
-            if t2 is not None and t2 < t:
-                timings[name] = t2
+        res = measure_row(name, timed_run, ref, once=once)
+        timings[name] = res["sec"]
+        secs = [a["sec"] for a in res["attempts"]]
+        if sum(s > 0 for s in secs) > 1:
             reruns.append(name)
-            print(f"# re-measured {name}: {t}s -> {timings[name]}s "
-                  f"(prior {ref})", file=sys.stderr)
-            # Backoff retry (round-11): this host shows multi-second
-            # hypervisor-steal stalls (loadavg 15+ while vmstat reports
-            # the VM idle) that outlast an immediate re-run — a 0.57 s
-            # query measured 10+ s on BOTH attempts inside one storm.
-            # Same remedy the sf1 fence has used since round 8: if the
-            # row still reads > 2x its quiet-host reference, wait out
-            # the burst once and take the min of three.  Both values
-            # are logged so a no-op retry is distinguishable from an
-            # improvement (round-11 ADVICE #3).
-            if ref is not None and timings[name] > 2 * ref + 0.2:
-                time.sleep(10)
-                before = timings[name]
-                t4, _ = measure_once(fn)
-                if t4 is not None and t4 < before:
-                    timings[name] = t4
-                print(f"# backoff re-measured {name}: {before}s -> "
-                      f"{timings[name]}s", file=sys.stderr)
+        if res["sec"] > 0:
+            print(f"# {name}: {res['sec']}s rows={rows.get('n')} "
+                  f"attempts={secs} (prior {ref})", file=sys.stderr)
+        else:
+            # One line, truncated (by the protocol): a full Java stack
+            # trace here burned most of the driver's bounded
+            # stdout/stderr tail in round 3 and cost the final JSON line.
+            print(f"# FAILED {name}: {res['errors'][-1]}", file=sys.stderr)
     # sum_query_sec = SUM OF RECORDED PER-QUERY TIMES, not the loop's
     # wall clock: the quiet-host protocol executes flagged queries a
     # second time inside the loop, and rounds that add many new queries
@@ -273,36 +239,11 @@ def main() -> int:
     # another SF would otherwise overwrite the sf0.1 record AND
     # min-merge cross-SF timings into the quiet-host best map, which
     # min() could then never repair.
-    if not only and os.environ.get("SPARK_GRAFT_BENCH_ONCE") != "1":
-        # "best" is keyed BY PROBE CLASS (round-11 verdict #3): a
-        # fast-host historical minimum persisting under a slower host
-        # understates current-host cost, so minima only merge when the
-        # prior sidecar's probe class matches this run's (within the
-        # same_probe_class tolerance); on a class change the map is
-        # re-seeded from this run and the old cross-host minima remain
-        # in best_all_hosts for the audit trail.
-        merge_class = same_probe_class(host_probe, prior_probe)
-        best = {
-            # memo-backed rows take THIS run's cold value, not the min:
-            # historical entries were warm-poisoned (0.24 s against a
-            # ~3 s cold measurement) and min() could never repair them
-            k: round(
-                v if k in NEVER_REMEASURE
-                else min(v, prior_raw.get(k, v)) if merge_class
-                else v,
-                3,
-            )
-            for k, v in timings.items() if v > 0
-        }
-        best_all = {
-            k: round(v if k in NEVER_REMEASURE
-                     else min(v, prior_best_all.get(k, v)), 3)
-            for k, v in timings.items() if v > 0
-        }
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_QUERIES.json"), "w") as fh:
+    if not only and not once:
+        best, best_all, merged = best_maps(timings, side, host_probe, cpus)
+        with open(SIDECAR, "w") as fh:
             json.dump({"sum_query_sec": total, "loop_wall_sec": loop_wall,
-                       "schema_version": 2, "sf": sf,
+                       "schema_version": 2, "sf": sf, "cpus": cpus,
                        "queries": timings, "remeasured": sorted(reruns),
                        "host_probe": host_probe,
                        "anchor_probe_factor": anchor_factor,
@@ -312,7 +253,7 @@ def main() -> int:
                        # run's probe either way (same class on merge,
                        # re-seeded from this run otherwise)
                        "best_probe": host_probe,
-                       "best_merged_with_prior": merge_class,
+                       "best_merged_with_prior": merged,
                        "best_all_hosts": best_all},
                       fh, indent=1, sort_keys=True)
     # Full per-query map to stdout first (round-4 verdict #7) for human
@@ -344,11 +285,7 @@ def main() -> int:
     # flags (sf1 timings divided by sf0.1 anchors), and the sidecar
     # pointer would advertise a full map the run deliberately did not
     # write.
-    full_sf01_run = (
-        not only
-        and sf == 0.1
-        and os.environ.get("SPARK_GRAFT_BENCH_ONCE") != "1"
-    )
+    full_sf01_run = not only and sf == 0.1 and not once
     summary = {
         "metric": "sum_query_sec",
         "value": total,
@@ -362,6 +299,8 @@ def main() -> int:
         "n_remeasured": len(reruns),
         "host_probe": host_probe,
     }
+    if clamped:
+        summary["probe_factor_clamped"] = True
     if full_sf01_run:
         base = _baseline_map()
         ratios = {

@@ -1,24 +1,27 @@
 """Shared benchmarking helpers for bench.py and tools_bench_sf1.py.
 
-Single source of truth for the deterministic HOST PROBE (round-10) and
-the probe-based cross-host normalization (round-11, verdict #3): the
-per-query anchors in BASELINE.md / BENCH_SF1_BASELINE.json are
-wall-clock numbers recorded on a specific machine class, so a slower
-co-tenant host inflates every ratio (round 10: 48 re-measures and a
-1.685 headline at unchanged code).  The probe is a data-independent
-CPU fingerprint — pure-JVM md5-hash and regex-extract throughput, the
-two expression families that dominate the catalog's hot paths — that
-rides every sidecar, and the ratio comparison divides by it instead of
-adjudicating host changes in prose.
+Single source of truth for the ONE measurement protocol both harnesses
+time queries with: :func:`run_order` fixes the row order,
+:func:`hygiene` resets session state before every timed attempt, and
+:func:`measure_protocol` decides how many attempts a row gets (the
+1.5x re-measure, the volatile min-of-N and the 10 s backoff, each
+trigger carrying the ``REMEASURE_FLOOR_SEC`` floor).  Each harness only
+describes its rows' policy to it; the fence's verdict
+(:func:`fence_row_outcome`) is separate and carries no floor.
 
-Extracting it here also closes round-10 ADVICE #3: the probe block was
-copy-pasted between the two harnesses, so a retune of one silently
-broke the cross-sidecar normalization the probe exists for.
+Also the single source of truth for the shared warmup, the
+deterministic HOST PROBE (a data-independent CPU fingerprint: pure-JVM
+md5 and regex throughput) and the probe-based cross-host normalization
+(round-11 verdict #3): anchors are wall-clock numbers from one machine
+class, so ratios divide by the probe factor instead of adjudicating
+host changes in prose.
 """
 
 from __future__ import annotations
 
+import gc
 import os
+import sys
 import time
 
 from pyspark.sql import SparkSession, functions as F
@@ -119,6 +122,134 @@ def warmup(spark: SparkSession, sf_dir: str) -> None:
         )
     )
     LogisticRegression(maxIter=2, labelCol="label").fit(_tiny_ml)
+
+
+#: Queries whose cost is a Python-side memo (the ``_ML_CACHE`` model
+#: store) are never re-measured: a second run is warm through a
+#: mechanism :func:`hygiene` cannot reach, so a min over attempts would
+#: hide the one-time training cost the row exists to measure (the cold
+#: BASELINE.md anchor for ml_train_rmse is ~9 s; the warm min was
+#: recording 0.36 s).
+NEVER_REMEASURE = frozenset({"ml_train_rmse"})
+
+#: Unconditional attempt count for ``volatile`` rows (round-12
+#: verdict's "unconditional min-of-3"): no single load-contaminated
+#: attempt can set a volatile row's timing or verdict.
+VOLATILE_ATTEMPTS = 3
+
+#: Absolute floor (seconds) added to the protocol's 1.5x re-measure and
+#: 2x backoff TRIGGERS, so sub-second noise on a short row never fires
+#: them.  Never part of a verdict: :func:`fence_row_outcome` stays at 2x.
+REMEASURE_FLOOR_SEC = 0.2
+
+
+def run_order(names) -> list[str]:
+    """Row order for both harnesses: sorted, NOT catalog order (the
+    ``queries()`` dict rotates for the driver's window; timings compare
+    run-over-run only if every row keeps its position), except that
+    ``ml_train_rmse`` runs before the other ``ml_*`` rows so the shared
+    model memo's training cost lands on the training row.  ``"ml_"``
+    sorts right before every ``ml_*`` name."""
+    return sorted(names, key=lambda n: "ml_" if n == "ml_train_rmse" else n)
+
+
+def hygiene(spark: SparkSession) -> None:
+    """Session reset before EVERY timed attempt of either harness:
+    clearCache drops operator-internal cached frames; memory-sink
+    tables of earlier streaming drains (temp views clearCache does not
+    touch) are dropped; a Python GC frees dead py4j handles, then a JVM
+    GC lets the ContextCleaner free localCheckpoint blocks (r13:
+    mid-loop rows measured 2-5x their isolated cost from that
+    accumulation).  Referenced state (the ml model memo) survives."""
+    from .streaming.events_stream import drop_memory_sink_tables
+
+    spark.catalog.clearCache()
+    drop_memory_sink_tables(spark)
+    gc.collect()
+    try:
+        spark.sparkContext._jvm.System.gc()  # noqa: SLF001
+    except Exception:  # noqa: BLE001 — hygiene only, never fail a run
+        pass
+
+
+def measure_protocol(
+    run_fn,
+    stormy_fn,
+    ref: float,
+    *,
+    volatile: bool = False,
+    never_remeasure: bool = False,
+    sleep=time.sleep,
+    getload=None,
+) -> dict:
+    """One measurement pass for a row; pure orchestration, no Spark.
+    ``run_fn()`` runs :func:`hygiene` + one timed execution and returns
+    the seconds to record (raises on failure); ``stormy_fn()`` is the
+    storm check; ``ref`` is the probe-normalized reference (``math.inf``
+    for none).  One attempt always; ``never_remeasure`` rows stop there.
+    VOLATILE rows take attempts until ``VOLATILE_ATTEMPTS`` succeed,
+    stopping once two exist and the best is under the re-measure
+    trigger (1.5 x ref + floor); other rows re-run once when over it.
+    A row still over the backoff trigger (2 x ref + floor) gets the
+    storm check, then ONE more attempt after a 10 s backoff.  Returns
+    ``{"sec", "attempts", "outcome", "failures", "errors"}``; each
+    attempt records (sec, loadavg-at-start) and ``outcome`` comes from
+    :func:`fence_row_outcome`."""
+    if getload is None:
+        getload = lambda: os.getloadavg()[0]  # noqa: E731
+    attempts: list[dict] = []
+    errors: list[str] = []
+    remeasure_at = 1.5 * ref + REMEASURE_FLOOR_SEC
+    backoff_at = 2.0 * ref + REMEASURE_FLOOR_SEC
+
+    def one_attempt() -> None:
+        la = round(getload(), 2)
+        try:
+            t = run_fn()
+        except Exception as exc:  # noqa: BLE001 — a row must never kill the run
+            attempts.append({"sec": -1.0, "load": la})
+            errors.append(" ".join(str(exc).split())[:200])
+            return
+        attempts.append({"sec": t, "load": la})
+
+    def valid() -> list[float]:
+        return [a["sec"] for a in attempts if a["sec"] > 0]
+
+    def best() -> float | None:
+        v = valid()
+        return min(v) if v else None
+
+    one_attempt()
+    stormy = False
+    if best() is not None and not never_remeasure:
+        if volatile:
+            # total-attempt bound: a permanently-failing row must not
+            # spin forever chasing VOLATILE_ATTEMPTS valid timings
+            while (
+                len(valid()) < VOLATILE_ATTEMPTS
+                and len(attempts) < VOLATILE_ATTEMPTS + 2
+            ):
+                if len(attempts) >= 2 and best() <= remeasure_at:
+                    break
+                one_attempt()
+        elif best() > remeasure_at:
+            one_attempt()
+        if best() > backoff_at:
+            if stormy_fn():
+                stormy = True
+            else:
+                sleep(10.0)
+                one_attempt()
+    b = best()
+    sec = b if b is not None else -1.0
+    return {
+        "sec": sec,
+        "attempts": attempts,
+        "outcome": fence_row_outcome(sec, ref, stormy),
+        "failures": len(attempts) - len(valid()),
+        "errors": errors,
+    }
+
 
 #: Probe of the ANCHOR host class — the machine class on which the
 #: BASELINE.md sf0.1 anchors are considered valid (min-of-3 quiet
@@ -237,6 +368,19 @@ def probe_factor(
         return 1.0
     lo, hi = bounds
     return round(min(hi, max(lo, cur / ref)), 3)
+
+
+def probe_factor_clamped(factor: float, raw: float | None) -> bool:
+    """True when ``PROBE_FACTOR_BOUNDS`` clamped the normalization
+    factor (the raw factor differs from the one applied); prints a
+    ``# WARNING`` line to stderr so a saturated clamp is never silent.
+    A missing raw factor (no probe) is not a clamp."""
+    if raw is None or raw == factor:
+        return False
+    print(f"# WARNING: probe factor clamped to {factor} (raw {raw}); "
+          f"normalized ratios do not cover the full host difference",
+          file=sys.stderr)
+    return True
 
 
 #: RAW (unclamped) probe factor above which the host is considered to

@@ -124,9 +124,10 @@ def test_merged_timing_never_clobbers_valid_prior():
 
 
 def _protocol(run_secs, ref, *, stormy=lambda: False, **kw):
-    """Drive tools_bench_sf1.measure_protocol with a canned sequence of
+    """Drive the shared bench_common.measure_protocol (the protocol both
+    bench.py and tools_bench_sf1.py time with) with a canned sequence of
     timings ('fail' raises) and a no-op sleep; returns (result, log)."""
-    import tools_bench_sf1 as tb
+    from recommendation_translation_spark.bench_common import measure_protocol
 
     seq = iter(run_secs)
     sleeps: list[float] = []
@@ -137,7 +138,7 @@ def _protocol(run_secs, ref, *, stormy=lambda: False, **kw):
             raise RuntimeError("boom")
         return v
 
-    res = tb.measure_protocol(
+    res = measure_protocol(
         run_fn,
         stormy,
         ref,

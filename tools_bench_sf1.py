@@ -6,58 +6,36 @@ repeatable sidecar with the quiet-host best-of protocol and a 2x guard.
 Protocol:
 - data: ``tools_gen_scale_data.py`` tiles /root/testdata/sf0.1 to sf1
   (run it first; default location /tmp/scaledata/sf1);
-- one timed run per query in sorted order after the same shape warmup
-  bench.py uses; any query measuring > 1.5x its reference (or > 2x,
-  the guard bound) is re-run once and the min recorded — co-tenant CPU
-  bursts don't fail the fence, real regressions reproduce;
-- load context (round-8 verdict #6): ``os.getloadavg()`` is recorded
-  beside every measurement (the 1-min average at measurement START),
-  so a future reader can adjudicate contention from the artifact alone
-  — the round-8 closing run violated 2 anchors 4.3x while executing
-  concurrently with the driver's own bench, and nothing in the JSON
-  showed it.  A still-violating query after the first re-measure gets
-  ONE more attempt after a 10 s backoff (a co-tenant burst outlasting
-  one immediate retry usually doesn't outlast the backoff too);
-- STORM DEFERRAL (round-11 verdict #7): the 10 s backoff demonstrably
-  does not outlast a sustained hypervisor-steal storm (r11 committed
-  two violation rows measured at loadavg 22–26 that a quiet re-run
-  cleared).  Before burning the backoff on a still-violating row, the
+- measurement: the ONE protocol bench.py uses too (``bench_common``:
+  ``warmup``, ``run_order``, ``hygiene``, ``measure_protocol`` — the
+  1.5x re-measure, the min-of-N for ``volatile`` rows of the baseline
+  file, and the 10 s backoff, each trigger with the 0.2 s floor).
+  Every attempt's (sec, loadavg-at-start) pair is recorded under
+  ``attempts`` (round-8 verdict #6), so contention can be adjudicated
+  from the artifact alone;
+- STORM DEFERRAL (round-11 verdict #7): the 10 s backoff does not
+  outlast a sustained hypervisor-steal storm.  Before the backoff the
   host probe is re-run; if it reads > STORM_PROBE_FACTOR x the anchor
-  class RAW, the row is DEFERRED to the end of the run instead.
-  Deferred rows get one more full protocol pass after the panel; rows
-  still unmeasurable on a quiet host land under ``deferred_storm`` in
-  the sidecar — a storm produces a deferred marker, never a committed
-  violation row (pinned by tests/test_fence_guard.py);
-- LOAD-TAIL IMMUNITY (round-12 verdict #1): the probe detects
-  hypervisor steal but NOT the harness's own load tail — the r12
-  judge's in-pytest fence recorded ``dedup_emb_cosine`` at 31.9 s
-  under 1-min loadavg 20.65 (prior suite activity + GC still
-  draining) while the adjudication probe read quiet, so the row was
-  classified a violation when the quiet min-of-3 was 12.7 s.  A
-  loadavg threshold cannot discriminate: the CLEAN committed r12 run
-  has green rows whose attempt-start loadavg reached 27.8 (the
-  fence's own healthy 32-thread saturation).  Two fixes instead:
-  (a) rows with storm/re-measure history (``volatile`` in the
-  baseline file) take an unconditional min-of-N — no single
-  contaminated attempt can set their timing; (b) ANY row still over
-  the guard after the in-place protocol on a quiet-probe host is
-  retried once at END OF RUN (``retried_end_of_run`` in the sidecar)
-  where the tail has had the whole remaining panel to drain — a real
-  regression reproduces there; weather does not.  Every attempt's
-  (sec, loadavg-at-start) pair is recorded under ``attempts`` so a
-  contaminated attempt is visible in the artifact;
-- reference: ``BENCH_SF1_BASELINE.json`` (seeded from the round-6
-  SCALE.md curve, post-ANN-panel-fix values; overwritten only
-  deliberately).  A query > 2x its reference ON A QUIET HOST is a
-  FENCE VIOLATION, listed in the output JSON and on stderr;
-- output: ``BENCH_sf1.json`` at the repo root — commit it per round
-  (the driver's own bench stays sf0.1).  ARTIFACT GUARD (round-11
-  verdict #1): a run with non-empty ``violations_2x`` may not replace
-  a committed artifact whose ``violations_2x`` is empty — it lands in
-  ``BENCH_sf1_VIOLATING.json`` for triage instead (r11's end-of-round
-  snapshot overwrote the clean quarterly 48/48 fence with a
-  storm-contaminated run).  SPARK_GRAFT_FENCE_FORCE=1 overrides after
-  an explicit triage decision.
+  class RAW, the row is DEFERRED to one more protocol pass after the
+  panel; rows still unmeasurable on a quiet host land under
+  ``deferred_storm`` — a storm produces a deferred marker, never a
+  committed violation row (pinned by tests/test_fence_guard.py);
+- LOAD-TAIL RETRY (round-12 verdict #1): the probe sees hypervisor
+  steal but NOT the harness's own load tail (r12: ``dedup_emb_cosine``
+  31.9 s under loadavg 20.65 on a quiet probe, 12.7 s quiet), and no
+  loadavg threshold discriminates.  ANY row still over the guard on a
+  quiet-probe host is retried once at END OF RUN
+  (``retried_end_of_run``), where the tail has drained — a real
+  regression reproduces there; weather does not;
+- verdict: ``BENCH_SF1_BASELINE.json`` holds the references (seeded
+  from the round-6 SCALE.md curve; overwritten only deliberately).  A
+  query > 2x its probe-normalized reference ON A QUIET HOST is a FENCE
+  VIOLATION (``fence_row_outcome``, no floor);
+- output: ``BENCH_sf1.json`` at the repo root.  ARTIFACT GUARD
+  (round-11 verdict #1): a non-clean run may not replace a clean
+  committed artifact — it lands in ``BENCH_sf1_VIOLATING.json`` for
+  triage instead; SPARK_GRAFT_FENCE_FORCE=1 overrides after an explicit
+  triage decision.
 
 Panel policy (round-10, SCALE.md "sf1 fence panel policy"): the
 default run covers the ACTIVE panel (``queries`` in the baseline
@@ -76,108 +54,24 @@ import os
 import sys
 import time
 
+from recommendation_translation_spark.bench_common import (
+    NEVER_REMEASURE,
+    fence_exit_code,
+    fence_row_outcome,
+    fence_write_decision,
+    host_is_stormy,
+    host_probe as _host_probe,
+    hygiene,
+    measure_protocol,
+    merged_timing,
+    probe_factor,
+    probe_factor_clamped,
+    probe_factor_raw,
+    run_order,
+    warmup,
+)
+
 REPO = os.path.dirname(os.path.abspath(__file__))
-
-#: Unconditional attempt count for ``volatile`` rows (storm/re-measure
-#: history in BENCH_SF1_BASELINE.json): the round-12 verdict's
-#: "unconditional min-of-3" — no single load-contaminated attempt can
-#: set a volatile row's timing or verdict.
-VOLATILE_ATTEMPTS = 3
-
-
-def measure_protocol(
-    run_fn,
-    stormy_fn,
-    ref: float,
-    *,
-    volatile: bool = False,
-    never_remeasure: bool = False,
-    sleep=time.sleep,
-    getload=None,
-) -> dict:
-    """One full quiet-host measurement pass for a fence row — pure
-    orchestration (no Spark; pinned Spark-free by
-    tests/test_fence_guard.py).  ``run_fn()`` performs hygiene + one
-    timed execution and returns seconds (raises on query failure);
-    ``stormy_fn()`` is the probe-based storm check; ``ref`` is the
-    probe-normalized reference.
-
-    Protocol: one attempt always; VOLATILE rows take attempts until
-    ``VOLATILE_ATTEMPTS`` succeed (early-stop only once the best is
-    already under the 1.5x re-measure trigger with >= 2 attempts — at
-    that point no further attempt can change the verdict, only shave
-    the number); other rows re-run immediately when > 1.5x ref; any
-    row still > 2x ref gets the storm check, then ONE more attempt
-    after a 10 s backoff.  ``never_remeasure`` rows (ml_train_rmse:
-    re-runs are warm through a Python-side memo) take exactly one
-    attempt.
-
-    Returns ``{"sec", "attempts", "outcome", "failures", "errors"}``
-    where ``attempts`` records every attempt's (sec, loadavg-at-start)
-    — a load-contaminated attempt is visible in the artifact — and
-    ``outcome`` comes from :func:`fence_row_outcome`, the single
-    source of truth for the ok/violation/deferred decision (round-12
-    ADVICE #3)."""
-    from recommendation_translation_spark.bench_common import (
-        fence_row_outcome,
-    )
-
-    if getload is None:
-        getload = lambda: os.getloadavg()[0]  # noqa: E731
-    attempts: list[dict] = []
-    errors: list[str] = []
-
-    def one_attempt() -> float | None:
-        la = round(getload(), 2)
-        try:
-            t = round(run_fn(), 2)
-        except Exception as exc:  # noqa: BLE001 — a row must never kill the fence
-            attempts.append({"sec": -1.0, "load": la})
-            errors.append(" ".join(str(exc).split())[:200])
-            return None
-        attempts.append({"sec": t, "load": la})
-        return t
-
-    def valid() -> list[float]:
-        return [a["sec"] for a in attempts if a["sec"] > 0]
-
-    def best() -> float | None:
-        v = valid()
-        return min(v) if v else None
-
-    one_attempt()
-    stormy = False
-    if best() is not None and not never_remeasure:
-        if volatile:
-            # total-attempt bound: a permanently-failing row must not
-            # spin forever chasing VOLATILE_ATTEMPTS valid timings
-            while (
-                len(valid()) < VOLATILE_ATTEMPTS
-                and len(attempts) < VOLATILE_ATTEMPTS + 2
-            ):
-                b = best()
-                if b is not None and len(attempts) >= 2 and b <= 1.5 * ref:
-                    break
-                one_attempt()
-        elif best() > 1.5 * ref:
-            one_attempt()
-        b = best()
-        if b is not None and b > 2.0 * ref:
-            if stormy_fn():
-                stormy = True
-            else:
-                sleep(10.0)
-                one_attempt()
-    b = best()
-    return {
-        "sec": b if b is not None else -1.0,
-        "attempts": attempts,
-        "outcome": fence_row_outcome(
-            b if b is not None else -1.0, ref, stormy
-        ),
-        "failures": len(attempts) - len(valid()),
-        "errors": errors,
-    }
 
 
 def main() -> int:
@@ -204,18 +98,6 @@ def main() -> int:
     # old lighter warmup left CPU clocks low and the probe read ~1.3×
     # slower than bench.py's on the same machine, silently loosening
     # every normalized threshold
-    from recommendation_translation_spark.bench_common import (
-        fence_exit_code,
-        fence_row_outcome,
-        fence_write_decision,
-        host_is_stormy,
-        host_probe as _host_probe,
-        merged_timing,
-        probe_factor,
-        probe_factor_raw,
-        warmup,
-    )
-
     warmup(spark, sf_dir)
 
     # same deterministic host probe bench.py records, from the SHARED
@@ -228,6 +110,7 @@ def main() -> int:
     host_probe = _host_probe(spark)
     anchor_probe = _b.get("anchor_probe")
     anchor_factor = probe_factor(host_probe, anchor_probe)
+    anchor_factor_raw = probe_factor_raw(host_probe, anchor_probe)
 
     qmap = entry_mod.queries()
     volatile = set(_b.get("volatile", []))
@@ -242,29 +125,6 @@ def main() -> int:
     retried: list[str] = []
     deferred_storm: dict[str, float] = {}
 
-    def hygiene() -> None:
-        # same cache hygiene as bench.py, plus GC: clearCache does NOT
-        # free localCheckpoint RDD blocks — those are released by the
-        # ContextCleaner only after the JVM GCs the RDD objects, which
-        # in a long single session lags tens of queries behind.  At sf1
-        # the accumulated blocks are large enough to squeeze the
-        # iterative rows (part_pagerank measured 27 s fresh vs 59 s as
-        # fence row 26-of-30).  Nudge both collectors so each row
-        # starts from a clean block store.
-        spark.catalog.clearCache()
-        from recommendation_translation_spark.streaming.events_stream import (
-            drop_memory_sink_tables,
-        )
-
-        drop_memory_sink_tables(spark)
-        import gc
-
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()  # noqa: SLF001
-        except Exception:
-            pass  # py4j surface changed — hygiene only, never fail the fence
-
     def run_row(name: str, ref: float) -> str:
         """One :func:`measure_protocol` pass for ``name``, merged into
         the run state (a later pass only improves the recorded timing —
@@ -275,17 +135,17 @@ def main() -> int:
         nrows: dict[str, int] = {}
 
         def timed_run() -> float:
-            hygiene()
+            hygiene(spark)
             t0 = time.perf_counter()
             nrows["n"] = fn(spark, sf_dir).count()
-            return time.perf_counter() - t0
+            return round(time.perf_counter() - t0, 2)
 
         res = measure_protocol(
             timed_run,
             lambda: host_is_stormy(_host_probe(spark), anchor_probe),
             ref,
             volatile=name in volatile,
-            never_remeasure=name == "ml_train_rmse",
+            never_remeasure=name in NEVER_REMEASURE,
         )
         attempts_log.setdefault(name, []).extend(res["attempts"])
         ok_attempts = [a for a in res["attempts"] if a["sec"] > 0]
@@ -322,17 +182,7 @@ def main() -> int:
         )
         return outcome
 
-    # Same ordering rule as bench.py: ml_train_rmse runs BEFORE the
-    # other ml_* rows so the shared one-time training cost lands on the
-    # training row — in plain sorted order ml_als_recs/ml_cv_tuning
-    # would pay it and ml_train_rmse would measure fully warm,
-    # hiding a training-cost regression from the fence.
-    names = sorted(baseline)
-    ml = [n for n in names if n.startswith("ml_")]
-    if "ml_train_rmse" in ml and ml[0] != "ml_train_rmse":
-        names.remove("ml_train_rmse")
-        names.insert(names.index(ml[0]), "ml_train_rmse")
-    for name in names:
+    for name in run_order(baseline):
         if name not in qmap:
             print(f"# panel query {name} missing from catalog", file=sys.stderr)
             timings[name] = -1.0
@@ -345,7 +195,7 @@ def main() -> int:
         elif (
             outcome == "violation"
             and timings[name] > 0
-            and name != "ml_train_rmse"
+            and name not in NEVER_REMEASURE
         ):
             # round-12 verdict #1: a quiet-PROBE violation can still be
             # the harness's own load tail (the probe sees hypervisor
@@ -397,7 +247,7 @@ def main() -> int:
         "attempts": attempts_log,
         "host_probe": host_probe,
         "anchor_probe_factor": anchor_factor,
-        "anchor_probe_factor_raw": probe_factor_raw(host_probe, anchor_probe),
+        "anchor_probe_factor_raw": anchor_factor_raw,
         "volatile": sorted(volatile & set(baseline)),
         "remeasured": sorted(reruns),
         "remeasure_failed": rerun_failures,
@@ -406,6 +256,8 @@ def main() -> int:
         "violations_2x": violations,
         "violations_2x_raw": raw_violations,
     }
+    if probe_factor_clamped(anchor_factor, anchor_factor_raw):
+        out["probe_factor_clamped"] = True
     committed = None
     try:
         with open(os.path.join(REPO, "BENCH_sf1.json")) as fh:
